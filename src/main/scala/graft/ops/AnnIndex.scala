@@ -30,12 +30,13 @@ import org.apache.spark.sql.functions._
   * declared (e.g. the kNN's `(lvl, src)`) is a KEYED part — `load`
   * resolves batches by latest-batch-wins per key group, so a delta
   * batch carrying the full replacement rows for just the groups an
-  * [[Hnsw.insertKnnDelta]] / [[Hnsw.deleteKnnDelta]] touched updates
-  * the index at delta-sized write cost instead of re-paying the full
-  * kNN rewrite the incremental compute just saved. A row whose
-  * NON-KEY columns are all null is a TOMBSTONE: it wins its group like
-  * any latest-batch row and then drops, deleting the group (how a
-  * deleted vector's (lvl, src) groups leave an append-only store).
+  * [[Hnsw.insertKnnDeltaIndexed]] / [[Hnsw.deleteKnnDeltaIndexed]]
+  * touched updates the index at delta-sized write cost instead of
+  * re-paying the full kNN rewrite the incremental compute just saved.
+  * A row whose NON-KEY columns are all null is a TOMBSTONE: it wins
+  * its group like any latest-batch row and then drops, deleting the
+  * group (how a deleted vector's (lvl, src) groups leave an
+  * append-only store).
   * Parts without `keys` are plain union-of-batches.
   *
   * 100 TB posture: saving is one parquet write per part; appending

@@ -249,20 +249,8 @@ object Hnsw {
     * build paid, instead of re-paying the whole corpus) plus a merge
     * bounded by the |A|·M stored edges; no old pair is re-scored.
     * Persist the kNN between arrivals as params-as-data
-    * ([[graft.ops.AnnIndex]]). */
-  def insertKnn(oldKnn: DataFrame, oldVecs: DataFrame,
-      newVecs: DataFrame, idCol: String, vecCol: String, seed: Long,
-      maxLevel: Int, m: Int, bands: Int,
-      bucketFn: (Int, Int, Column) => Column): DataFrame =
-    topMEdges(
-      oldKnn.select("lvl", "src", "dst", "c")
-        .unionByName(freshTopM(oldKnn, oldVecs, newVecs, idCol, vecCol,
-          seed, maxLevel, m, bands, bucketFn)),
-      m)
-
-  /** The bounded fresh-candidate top-M both insert forms merge from:
-    * every banded-bucket pair with a NEW endpoint, in both src roles
-    * (src ∈ A∪B gains dst ∈ B candidates; src ∈ B also scans dst ∈ A).
+    * ([[graft.ops.AnnIndex]]).
+    *
     * `newVecs` rows whose id already exists in `oldVecs` are DROPPED
     * up front (one id-only anti-join, no extra job): the
     * insert ≡ rebuild identity assumes disjoint arrivals, and an
@@ -270,7 +258,7 @@ object Hnsw {
     * and leave stale stored edges to the old copy — re-arrivals are
     * treated as already-present, never as silent corruption; updates
     * are [[deleteKnn]] then insert. */
-  private def freshTopM(oldKnn: DataFrame, oldVecs: DataFrame,
+  def insertKnn(oldKnn: DataFrame, oldVecs: DataFrame,
       newVecs: DataFrame, idCol: String, vecCol: String, seed: Long,
       maxLevel: Int, m: Int, bands: Int,
       bucketFn: (Int, Int, Column) => Column): DataFrame = {
@@ -280,37 +268,22 @@ object Hnsw {
       bands, bucketFn)
     val memB = bandedMembers(onlyNew, idCol, vecCol, seed, maxLevel,
       bands, bucketFn)
-    val freshPairs = pairsOf(memA.unionByName(memB), memB)
-      .unionByName(pairsOf(memB, memA))
-    topMPerSrc(freshPairs, m)
+    topMEdges(
+      oldKnn.select("lvl", "src", "dst", "c")
+        .unionByName(freshTopM(memA, memB, m)),
+      m)
   }
 
-  /** DELTA form of [[insertKnn]] for [[AnnIndex.append]]: only the
-    * (lvl, src) groups whose top-M ACTUALLY CHANGES are returned, each
-    * as its FULL replacement top-M (old stored edges of the group
-    * merged with the fresh candidates and re-ranked — the same
-    * topM(P∪Q) identity as insertKnn, scoped to touched groups — then
-    * diffed against the stored rows by [[changedGroups]]: a group that
-    * merely GAINED a candidate but kept its exact top-M stays out of
-    * the delta, which is what keeps moderate batches from saturating
-    * the "delta" into a full index rewrite — most gained candidates
-    * lose to every stored edge). Latest-batch-wins resolution over key
-    * (lvl, src) then yields exactly insertKnn's relation: unchanged
-    * groups keep their stored rows, changed groups take the delta — so
-    * `load(save(knn(A)) + append(insertKnnDelta(..B..)))` ≡
-    * `buildKnn(A ∪ B)` at DELTA-sized write cost (the storage half of
-    * incremental insert; PersistenceSpec pins the identity). */
-  def insertKnnDelta(oldKnn: DataFrame, oldVecs: DataFrame,
-      newVecs: DataFrame, idCol: String, vecCol: String, seed: Long,
-      maxLevel: Int, m: Int, bands: Int,
-      bucketFn: (Int, Int, Column) => Column): DataFrame = {
-    val fresh = freshTopM(oldKnn, oldVecs, newVecs, idCol, vecCol,
-      seed, maxLevel, m, bands, bucketFn)
-    val touched = fresh.select("lvl", "src").distinct()
-    val stored = oldKnn.select("lvl", "src", "dst", "c")
-      .join(touched, Seq("lvl", "src"), "left_semi")
-    changedGroups(topMEdges(stored.unionByName(fresh), m), stored)
-  }
+  /** The bounded fresh-candidate top-M both insert forms merge from:
+    * every banded-bucket pair with a NEW endpoint (`memB`), in both src
+    * roles (src ∈ A∪B gains dst ∈ B candidates; src ∈ B also scans
+    * dst ∈ A). Both memberships are [[bandedMembers]]-shaped. */
+  private def freshTopM(memA: DataFrame, memB: DataFrame, m: Int)
+      : DataFrame =
+    topMPerSrc(
+      pairsOf(memA.unionByName(memB), memB)
+        .unionByName(pairsOf(memB, memA)),
+      m)
 
   /** Only the (lvl, src) groups whose replacement rows differ from the
     * stored rows, each in full. Sound for insert-side deltas because a
@@ -444,9 +417,10 @@ object Hnsw {
     * corpus vectors (keyed — CDC tombstones need it), the banded
     * membership part and an empty deletion ledger. This is the save
     * [[graft.streaming.StreamOps.annIndexMaintenanceStream]] grows
-    * from with batch-sized per-micro-batch COMPUTE (a store seeded
-    * without the membership parts still works — the stream falls back
-    * to corpus-rescan probes). */
+    * from with batch-sized per-micro-batch COMPUTE — the only seed it
+    * accepts: the membership part and the ledger are what its
+    * [[insertKnnDeltaIndexed]] / [[deleteKnnDeltaIndexed]] probes
+    * read. */
   def saveIndex(path: String, vecs: DataFrame, idCol: String,
       vecCol: String, seed: Long, maxLevel: Int, m: Int, bands: Int,
       bucketFn: (Int, Int, Column) => Column,
@@ -514,18 +488,6 @@ object Hnsw {
   private def sortedByKey(df: DataFrame, key: String): DataFrame =
     df.repartitionByRange(col(key)).sortWithinPartitions(key)
 
-  /** [[insertKnnDelta]] answered from the PERSISTED membership part:
-    * per-batch compute is one cell-pruned scan of stored membership
-    * (the batch's own banded cells, inlined as an `IN` predicate the
-    * parquet scan prunes row groups by) joined against the batch —
-    * O(|B| · bucketPop · bands · levels) candidate cosines and
-    * blast-radius-sized scans, NEVER a corpus re-hash. Exact: members
-    * outside the batch's cells cannot pair with it, so the pruned
-    * relation feeds [[insertKnn]]'s own fresh-pair algebra unchanged.
-    * Returns (knn delta, member delta) — the two parts the caller
-    * appends together, `mb`-stamped with the members part's current
-    * batch count. Caller guarantees `newVecs` ids are not live in the
-    * index (the stream's pruned overlap anti-join). */
   /** The cell-pruned live-membership probe [[insertKnnDeltaIndexed]]
     * scans — public so the plan-shape ratchet can pin that the cell
     * predicate reaches the members part's parquet scan as
@@ -535,6 +497,28 @@ object Hnsw {
       batchMembers: DataFrame): DataFrame =
     pruneBy(liveMembers(members, memdead), "cell", batchMembers, "cell")
 
+  /** DELTA form of [[insertKnn]] for [[AnnIndex.append]], answered from
+    * the PERSISTED membership part: only the (lvl, src) groups whose
+    * top-M ACTUALLY CHANGES are returned, each as its FULL replacement
+    * top-M (stored edges of the group merged with the fresh candidates
+    * and re-ranked — insertKnn's topM(P∪Q) identity, scoped to touched
+    * groups — then diffed against the stored rows by [[changedGroups]],
+    * so a group that merely GAINED a losing candidate stays out of the
+    * delta). Latest-batch-wins resolution over (lvl, src) then yields
+    * exactly insertKnn's relation, so `load(saveIndex(A) +
+    * append(delta))` ≡ `buildKnn(A ∪ B)` (PersistenceSpec pins it).
+    *
+    * Per-batch compute is one cell-pruned scan of stored membership
+    * (the batch's own banded cells, inlined as an `IN` predicate the
+    * parquet scan prunes row groups by) joined against the batch —
+    * O(|B| · bucketPop · bands · levels) candidate cosines and
+    * blast-radius-sized scans, NEVER a corpus re-hash. Exact: members
+    * outside the batch's cells cannot pair with it, so the pruned
+    * relation feeds insertKnn's own fresh-pair algebra unchanged.
+    * Returns (knn delta, member delta) — the two parts the caller
+    * appends together, `mb`-stamped with the members part's current
+    * batch count. Caller guarantees `newVecs` ids are not live in the
+    * index (the stream's pruned overlap anti-join). */
   def insertKnnDeltaIndexed(oldKnn: DataFrame, members: DataFrame,
       memdead: DataFrame, newVecs: DataFrame, idCol: String,
       vecCol: String, seed: Long, maxLevel: Int, m: Int, bands: Int,
@@ -546,10 +530,7 @@ object Hnsw {
     val memBSlim = memB.select(slim.map(col): _*)
     val memA = memberProbe(members, memdead, memB)
       .select(slim.map(col): _*)
-    val fresh = topMPerSrc(
-      pairsOf(memA.unionByName(memBSlim), memBSlim)
-        .unionByName(pairsOf(memBSlim, memA)),
-      m).localCheckpoint(true)
+    val fresh = freshTopM(memA, memBSlim, m).localCheckpoint(true)
     val touched = fresh.select("lvl", "src").distinct()
     val stored = pruneBy(oldKnn, "src", touched, "src")
       .select("lvl", "src", "dst", "c")
@@ -560,8 +541,17 @@ object Hnsw {
     (delta, memB)
   }
 
-  /** [[deleteKnnDelta]] answered from the PERSISTED membership part —
-    * note it needs NO vectors, seed or bucket family: the deleted ids'
+  /** DELTA form of [[deleteKnn]] for [[AnnIndex.append]]: replacement
+    * rows for every (lvl, src) group the delete can change, plus
+    * TOMBSTONES (all-null non-key rows — [[AnnIndex]]'s deletion
+    * convention for an append-only store) so groups that vanish
+    * entirely (src ∈ D, or an affected group whose recompute comes
+    * back empty) actually leave on load; a tombstoned group that also
+    * gets replacement rows in the same batch resolves to them (the
+    * whole latest batch wins the group, then the tombstone drops).
+    *
+    * Answered from the PERSISTED membership part — it needs NO
+    * vectors, seed or bucket family: the deleted ids'
     * stored member rows already carry their cells, affected groups are
     * found by pruning the stored kNN to vids sharing those cells (a
     * KEY-column predicate that commutes below the keyed-resolve
@@ -662,58 +652,6 @@ object Hnsw {
       .join(affected, Seq("lvl", "src"), "left_anti")
       .unionByName(recomputed)
   }
-
-  /** DELTA form of [[deleteKnn]] for [[AnnIndex.append]]: replacement
-    * rows for every (lvl, src) group the delete can change, plus
-    * TOMBSTONES (all-null non-key rows — [[AnnIndex]]'s deletion
-    * convention for an append-only store) so groups that vanish
-    * entirely (src ∈ D, or an affected group whose recompute comes
-    * back empty) actually leave on load. Tombstoned groups that also
-    * get replacement rows in the same batch resolve correctly: the
-    * whole latest batch wins the group, then the tombstone row itself
-    * drops. `load(save(knn(A)) + append(deleteKnnDelta(..D..)))` ≡
-    * `buildKnn(A ∖ D)` at blast-radius-sized write cost
-    * (PersistenceSpec pins the identity, composed after an insert
-    * append). */
-  def deleteKnnDelta(oldKnn: DataFrame, oldVecs: DataFrame,
-      deleteIds: DataFrame, idCol: String, vecCol: String, seed: Long,
-      maxLevel: Int, m: Int, bands: Int,
-      bucketFn: (Int, Int, Column) => Column): DataFrame = {
-    val del = deleteIds.select(col(idCol).cast("long").as("__did"))
-      .distinct()
-    val keptVecs = oldVecs.join(
-      del.select(col("__did").as(idCol)), Seq(idCol), "left_anti")
-    val affected = oldKnn
-      .join(del.select(col("__did").as("dst")), Seq("dst"))
-      .select("lvl", "src").distinct()
-      .join(del.select(col("__did").as("src")), Seq("src"), "left_anti")
-    val gone = oldKnn
-      .join(del.select(col("__did").as("src")), Seq("src"))
-      .select("lvl", "src").distinct()
-    val memAll = bandedMembers(keptVecs, idCol, vecCol, seed, maxLevel,
-      bands, bucketFn)
-    val memAff = memAll.join(
-      affected.select(col("lvl"), col("src").as("vid")),
-      Seq("lvl", "vid"))
-    val recomputed = topMPerSrc(pairsOf(memAff, memAll), m)
-    affected.unionByName(gone)
-      .select(col("lvl"), col("src"),
-        lit(null).cast("long").as("dst"),
-        lit(null).cast("double").as("c"))
-      .unionByName(recomputed)
-  }
-
-  /** [[insertKnn]] + [[adjacencyFromKnn]] over the merged corpus. */
-  def insertAdjacency(oldKnn: DataFrame, oldVecs: DataFrame,
-      newVecs: DataFrame, idCol: String, vecCol: String, seed: Long,
-      maxLevel: Int, m: Int, bands: Int,
-      bucketFn: (Int, Int, Column) => Column): DataFrame =
-    adjacencyFromKnn(
-      insertKnn(oldKnn, oldVecs, newVecs, idCol, vecCol, seed,
-        maxLevel, m, bands, bucketFn),
-      oldVecs.select(col(idCol), col(vecCol))
-        .unionByName(newVecs.select(col(idCol), col(vecCol))),
-      idCol, vecCol)
 
   def buildAdjacency(vecs: DataFrame, idCol: String, vecCol: String,
       seed: Long, maxLevel: Int, m: Int, bands: Int,

@@ -43,6 +43,29 @@ import org.apache.spark.sql.functions._
 object TextIndex {
   private val Kind = "bm25"
 
+  /** Every part [[save]] and [[compact]] write — the one store layout
+    * every other entry point accepts. */
+  private val Layout =
+    Seq("postings", "docs", "termdf", "stats", "deleted", "pending")
+
+  /** The one store check every entry point runs first, against the
+    * params and part names the caller already holds (no job, no
+    * manifest read): the store must be a BM25 index with every
+    * [[Layout]] part. */
+  private def requireStore(op: String, path: String,
+      params: Map[String, String], parts: Iterable[String]): Unit = {
+    require(params.get("kind").contains(Kind),
+      s"TextIndex.$op: index at $path has kind " +
+        s"${params.getOrElse("kind", "?")}, expected $Kind")
+    val missing = Layout.filterNot(parts.toSet)
+    require(missing.isEmpty,
+      s"TextIndex.$op: index at $path has no ${missing.mkString("/")} " +
+        "part — seed it with TextIndex.save")
+  }
+
+  private def requireStore(op: String, store: AnnIndex.Store): Unit =
+    requireStore(op, store.path, store.params, store.manifest.map(_._1))
+
   /** Range-cluster a part on its probe key before writing — the same
     * discipline as [[Hnsw]]'s `sortedByKey`: `postings` clustered on
     * `term` makes a query's pushed term-IN prune at the row-group
@@ -161,20 +184,15 @@ object TextIndex {
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit = {
     val store = AnnIndex.open(spark, path)
-    require(store.params.get("kind").contains(Kind),
-      s"TextIndex.delete: index at $path has kind " +
-        s"${store.params.getOrElse("kind", "?")}, expected $Kind")
+    requireStore("delete", store)
     val dels = ids.select(col(idCol)).distinct().localCheckpoint(true)
     // a delete must also retract any PENDING text for the id — a
     // keyed tombstone (null text) in the same append, so a staged
     // update that is later deleted can never resurrect at the fold;
     // ids with no pending entry resolve to a lone tombstone and drop
-    val pendingTomb =
-      if (!store.manifest.exists(_._1 == "pending"))
-        Map.empty[String, DataFrame]
-      else Map("pending" -> dels.select(col(idCol),
-        lit(null).cast("string").as(store.params("text_col"))))
-    AnnIndex.appendTo(store, Map("deleted" -> dels) ++ pendingTomb)
+    AnnIndex.appendTo(store, Map("deleted" -> dels,
+      "pending" -> dels.select(col(idCol),
+        lit(null).cast("string").as(store.params("text_col")))))
     ()
   }
 
@@ -221,12 +239,7 @@ object TextIndex {
   def stageUpdates(spark: SparkSession, path: String, docs: DataFrame,
       idCol: String, textCol: String): Unit = {
     val store = AnnIndex.open(spark, path)
-    require(store.params.get("kind").contains(Kind),
-      s"TextIndex.stageUpdates: index at $path has kind " +
-        s"${store.params.getOrElse("kind", "?")}, expected $Kind")
-    require(store.manifest.exists(_._1 == "pending"),
-      s"TextIndex.stageUpdates: index at $path has no pending part " +
-        "(a legacy store) — compact it once to upgrade the layout")
+    requireStore("stageUpdates", store)
     val staged = docs.select(col(idCol), col(textCol))
       .dropDuplicates(idCol, textCol).localCheckpoint(true)
     val ids = idsWithConflictGuard(staged, idCol, cs =>
@@ -274,13 +287,7 @@ object TextIndex {
   def applyCdc(store: AnnIndex.Store, dels: DataFrame,
       staged: DataFrame, appends: DataFrame, idCol: String,
       textCol: String): (Long, AnnIndex.Store) = {
-    val path = store.path
-    require(store.params.get("kind").contains(Kind),
-      s"TextIndex.applyCdc: index at $path has kind " +
-        s"${store.params.getOrElse("kind", "?")}, expected $Kind")
-    require(store.manifest.exists(_._1 == "pending"),
-      s"TextIndex.applyCdc: index at $path has no pending part " +
-        "(a legacy store) — compact it once to upgrade the layout")
+    requireStore("applyCdc", store)
     val delIds = dels.select(col(idCol)).distinct().localCheckpoint(true)
     // stageUpdates' guard, unchanged: one text per id or fail loudly
     val stg = staged.select(col(idCol), col(textCol))
@@ -344,18 +351,14 @@ object TextIndex {
     * over index rows), stats re-derive from the merged doc list, and
     * the deleted/pending parts empty — freeing those ids for
     * re-insertion. After this, search's df/N are exact again
-    * (equality with save(survivors ∪ updates) is spec-pinned). A
-    * legacy (pre-pending) store folds fine and comes out UPGRADED
-    * with an empty pending part. `dst` must differ from `src`, as in
-    * [[AnnIndex.compact]]. */
+    * (equality with save(survivors ∪ updates) is spec-pinned). `dst`
+    * must differ from `src`, as in [[AnnIndex.compact]]. */
   def compact(spark: SparkSession, srcPath: String, dstPath: String)
       : Unit = {
     require(srcPath != dstPath,
       "TextIndex.compact: dstPath must differ from srcPath")
     val (parts, params) = AnnIndex.load(spark, srcPath)
-    require(params.get("kind").contains(Kind),
-      s"TextIndex.compact: index at $srcPath has kind " +
-        s"${params.getOrElse("kind", "?")}, expected $Kind")
+    requireStore("compact", srcPath, params, parts.keys)
     val idCol = params("id_col")
     val textCol = params("text_col")
     // no-op fast paths: the deleted and pending parts hold only the
@@ -370,8 +373,9 @@ object TextIndex {
     val dead = if (parts("deleted").isEmpty) None
       else Some(parts("deleted").select(col(idCol)).distinct()
         .localCheckpoint(true))
-    val pend = parts.get("pending").filter(p => !p.isEmpty)
-      .map(_.select(col(idCol), col(textCol)).localCheckpoint(true))
+    val pend = if (parts("pending").isEmpty) None
+      else Some(parts("pending").select(col(idCol), col(textCol))
+        .localCheckpoint(true))
     // pending ids are on the dead list by construction (an update is
     // delete + stage), so survivors never overlap the pending docs
     val pendDelta = pend.map(p => deltaParts(p, idCol, textCol))
@@ -436,9 +440,7 @@ object TextIndex {
     * micro-batch, successor handle returned for the compaction probe. */
   def append(store: AnnIndex.Store, docs: DataFrame,
       idCol: String, textCol: String): (Long, AnnIndex.Store) = {
-    require(store.params.get("kind").contains(Kind),
-      s"TextIndex.append: index at ${store.path} has kind " +
-        s"${store.params.getOrElse("kind", "?")}, expected $Kind")
+    requireStore("append", store)
     val arriving = docs.select(col(idCol), col(textCol))
       .dropDuplicates(idCol, textCol)
       .localCheckpoint(true)
@@ -479,21 +481,20 @@ object TextIndex {
       .filter(_.nonEmpty).distinct.toSeq
     require(qt.nonEmpty, "TextIndex.search needs a non-empty query")
     val (parts, params) = AnnIndex.load(spark, path)
-    require(params.get("kind").contains(Kind),
-      s"TextIndex.search: index at $path has kind " +
-        s"${params.getOrElse("kind", "?")}, expected $Kind")
+    requireStore("search", path, params, parts.keys)
     val idCol = params("id_col")
     // the emptiness probe is one job over the updates-since-last-
     // compact relation (broadcast-sized); when pending is empty —
-    // after every fold, the steady state — the plan is EXACTLY the
-    // pre-pending shape (the PlanShapeSpec exchange ratchet)
+    // after every fold, the steady state — the plan has no pending
+    // leg at all (the PlanShapeSpec exchange ratchet)
     // pin = false: the pending relation is broadcast-sized and this is
     // the QUERY path — an eager checkpoint here would run blocking
     // materialization jobs per search and pin executor storage blocks
     // between folds (write paths keep the pin; they materialize
     // every part anyway)
-    val pendDelta = parts.get("pending").filter(p => !p.isEmpty)
-      .map(p => deltaParts(p, idCol, params("text_col"), pin = false))
+    val pendDelta = if (parts("pending").isEmpty) None
+      else Some(deltaParts(parts("pending"), idCol, params("text_col"),
+        pin = false))
     // batches-sized and |terms|-sized rollups — broadcast into the
     // posting scan so the only wide stage is the per-doc score agg
     val stats = pendDelta.fold(parts("stats"))(d =>

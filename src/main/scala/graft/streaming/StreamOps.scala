@@ -135,9 +135,10 @@ object StreamOps {
     * of arriving vectors loads the PERSISTED index
     * ([[graft.ops.AnnIndex]] at `indexPath`), computes the
     * delta-sized incremental merge
-    * ([[graft.ops.Hnsw.insertKnnDelta]] — only the (lvl, src) groups
-    * the batch touches), and appends BOTH the kNN delta and the new
-    * vectors as one more batch directory, manifest last. The next
+    * ([[graft.ops.Hnsw.insertKnnDeltaIndexed]] — only the (lvl, src)
+    * groups whose top-M the batch changes), and appends the kNN delta,
+    * the new vectors and their membership rows as one more batch
+    * directory, manifest last. The next
     * micro-batch inserts against everything that arrived before it,
     * and a search process can [[graft.ops.AnnIndex.load]] the same
     * path at any time for a fully-consistent index (torn appends are
@@ -149,9 +150,9 @@ object StreamOps {
     * probes read the stored membership through cell-pruned parquet
     * scans ([[graft.ops.Hnsw.insertKnnDeltaIndexed]] /
     * [[graft.ops.Hnsw.deleteKnnDeltaIndexed]]) instead of re-hashing
-    * the stored corpus every micro-batch. A legacy store (knn +
-    * vectors only, the pre-membership seeding) still works — the loop
-    * falls back to the corpus-rescan probes. Re-arrivals of stored
+    * the stored corpus every micro-batch. A store without the
+    * `members`/`memdead` parts fails its first micro-batch loudly,
+    * before anything is appended. Re-arrivals of stored
     * ids are dropped (insert idempotence) via an id-pruned anti-join
     * (the batch's own ids pushed into the stored scan — never a
     * corpus re-scan).
@@ -174,17 +175,16 @@ object StreamOps {
     * column — several versions of one id in a batch resolve to the
     * HIGHEST sequence deterministically; without it, conflicting
     * same-id vectors fail loudly (see [[resolveLatest]]).
-    * Deletes ride [[graft.ops.Hnsw.deleteKnnDelta]] + a vector
-    * TOMBSTONE append — which requires the seed save to have declared
-    * BOTH parts keyed: `keys = Map("knn" -> Seq("lvl", "src"),
-    * "vectors" -> Seq(idCol))` (an un-keyed vectors part cannot shed
-    * a deleted row, and a stale stored vector would keep feeding
-    * bucket candidates to later inserts).
+    * Deletes ride [[graft.ops.Hnsw.deleteKnnDeltaIndexed]] + a
+    * deletion-ledger append + a vector TOMBSTONE append (saveIndex
+    * declares the knn and vectors parts keyed, so both shed deleted
+    * rows on load).
     *
     * In-loop compaction (`compactEvery` > 0): after a micro-batch
     * whose append leaves any part at ≥ `compactEvery` batch
     * directories, the loop folds the index into its NEXT GENERATION
-    * ([[graft.ops.AnnIndex.compactToNextGen]] — the fold's own
+    * ([[graft.ops.AnnIndex.compactToNextGen]] with the ledger-aware
+    * [[graft.ops.Hnsw.compactIndex]] — the fold's own
     * manifest-last write commits the flip; the prior generation stays
     * on disk one cycle for in-flight readers, and a crash at any point
     * leaves the previous index live). Read cost of a keyed part grows
@@ -213,11 +213,12 @@ object StreamOps {
         // batch) and per-part schema footer re-reads collapse into
         // the open (guide §1.2: per-batch fixed cost is pass count)
         var store = graft.ops.AnnIndex.open(sp, indexPath)
-        // a store seeded by Hnsw.saveIndex carries the persisted
-        // banded-membership part + deletion ledger: maintenance
-        // COMPUTE is then batch-sized (cell-pruned probes) instead of
-        // a per-batch corpus re-hash; legacy stores fall back
-        val indexed = store.manifest.exists(_._1 == "members")
+        val missing = Seq("members", "memdead")
+          .filterNot(p => store.manifest.exists(_._1 == p))
+        require(missing.isEmpty,
+          s"annIndexMaintenanceStream: index at $indexPath has no " +
+            s"${missing.mkString("/")} part — seed it with " +
+            "Hnsw.saveIndex")
         if (opCol.nonEmpty) {
           val dels = batch.toDF()
             .filter(col(opCol) === "delete")
@@ -226,22 +227,13 @@ object StreamOps {
             val vecType = store.parts("vectors").schema(vecCol).dataType
             val vecTombs = dels.select(col(idCol),
               lit(null).cast(vecType).as(vecCol))
-            if (indexed) {
-              val th = store.partBatches("members")
-              val (delta, dead) = graft.ops.Hnsw.deleteKnnDeltaIndexed(
-                store.parts("knn"), store.parts("members"),
-                store.parts("memdead"), dels, idCol, m, th)
-              store = graft.ops.AnnIndex.appendTo(store,
-                Map("knn" -> delta.localCheckpoint(true),
-                  "vectors" -> vecTombs, "memdead" -> dead))
-            } else {
-              val delta = graft.ops.Hnsw.deleteKnnDelta(
-                  store.parts("knn"), store.parts("vectors"), dels,
-                  idCol, vecCol, seed, maxLevel, m, bands, bucketFn)
-                .localCheckpoint(true)
-              store = graft.ops.AnnIndex.appendTo(store,
-                Map("knn" -> delta, "vectors" -> vecTombs))
-            }
+            val th = store.partBatches("members")
+            val (delta, dead) = graft.ops.Hnsw.deleteKnnDeltaIndexed(
+              store.parts("knn"), store.parts("members"),
+              store.parts("memdead"), dels, idCol, m, th)
+            store = graft.ops.AnnIndex.appendTo(store,
+              Map("knn" -> delta.localCheckpoint(true),
+                "vectors" -> vecTombs, "memdead" -> dead))
             // the successor handle IS the post-delete state — the
             // insert half reads it (a deleted-then-reinserted id must
             // not be dropped as an overlap, and its old edges must
@@ -308,32 +300,22 @@ object StreamOps {
           .join(storedIds, Seq(idCol), "left_anti")
           .localCheckpoint(true)
         if (!fresh.isEmpty) {
-          if (indexed) {
-            val mb = store.partBatches("members")
-            val (delta, memDelta) = graft.ops.Hnsw.insertKnnDeltaIndexed(
-              oldKnn, store.parts("members"), store.parts("memdead"),
-              fresh, idCol, vecCol, seed, maxLevel, m, bands, bucketFn,
-              mb)
-            store = graft.ops.AnnIndex.appendTo(store,
-              Map("knn" -> delta.localCheckpoint(true),
-                "vectors" -> fresh, "members" -> memDelta))
-          } else {
-            val delta = graft.ops.Hnsw.insertKnnDelta(oldKnn, oldVecs,
-                fresh, idCol, vecCol, seed, maxLevel, m, bands, bucketFn)
-              .localCheckpoint(true)
-            store = graft.ops.AnnIndex.appendTo(store,
-              Map("knn" -> delta, "vectors" -> fresh))
-          }
+          val mb = store.partBatches("members")
+          val (delta, memDelta) = graft.ops.Hnsw.insertKnnDeltaIndexed(
+            oldKnn, store.parts("members"), store.parts("memdead"),
+            fresh, idCol, vecCol, seed, maxLevel, m, bands, bucketFn,
+            mb)
+          store = graft.ops.AnnIndex.appendTo(store,
+            Map("knn" -> delta.localCheckpoint(true),
+              "vectors" -> fresh, "members" -> memDelta))
         }
-        // a members-bearing store needs the ledger-aware fold: a
-        // generic fold would keep old mb stamps while the batch
-        // counter restarts, letting later deletes undercut them.
-        // the successor handle's manifest answers the trigger probe —
-        // no fresh manifest read
+        // the ledger-aware fold: a generic fold would keep old mb
+        // stamps while the batch counter restarts, letting later
+        // deletes undercut them. the successor handle's manifest
+        // answers the trigger probe — no fresh manifest read
         if (compactEvery > 0 && store.maxBatches >= compactEvery)
           graft.ops.AnnIndex.compactToNextGen(sp, indexPath,
-            if (indexed) graft.ops.Hnsw.compactIndex
-            else graft.ops.AnnIndex.compact)
+            graft.ops.Hnsw.compactIndex)
         ()
     }
 
@@ -364,10 +346,9 @@ object StreamOps {
     * search serves it immediately (query-time postings over the
     * broadcast-sized pending relation) and the next SCHEDULED fold
     * merges it in — N colliding batches cost N small appends and ONE
-    * fold, not N Lucene merges. A LEGACY store (seeded before the
-    * pending part existed) keeps the old behavior — an immediate
-    * forced fold, requiring `compactEvery > 0`, failing loudly
-    * otherwise rather than silently degrading the update to a delete.
+    * fold, not N Lucene merges. Every CDC micro-batch lands through
+    * [[graft.ops.TextIndex.applyCdc]], which refuses a store without
+    * the `pending` part before appending anything.
     *
     * `seqCol` (optional): a CDC sequence/offset column. A micro-batch
     * can legitimately carry SEVERAL versions of one id (delete X,
@@ -396,54 +377,23 @@ object StreamOps {
         // ONE store handle per micro-batch (see the ANN loop): the
         // former partKeys + load-per-call + trigger-probe manifest
         // re-reads collapse into this open; appends chain successors
-        var store = graft.ops.AnnIndex.open(sp, indexPath)
-        var fused = false
-        if (opCol.nonEmpty) {
-          val dels = batch.toDF().filter(col(opCol) === "delete")
-            .select(idCol).localCheckpoint(true)
-          if (!dels.isEmpty) {
-            if (store.partKeys.contains("pending")) {
-              // same-batch delete + re-arrival = a CDC UPDATE, staged
-              // on the keyed pending part; the whole micro-batch —
-              // deletes, staged updates, leftover appends — lands as
-              // ONE load + ONE multi-part append (TextIndex.applyCdc;
-              // previously delete → stageUpdates → append = three full
-              // load/append cycles and three manifest versions per
-              // colliding batch)
-              val colliding = arrivals
-                .join(dels, Seq(idCol), "left_semi")
-              val (_, next) = graft.ops.TextIndex.applyCdc(store, dels,
-                colliding,
-                arrivals.join(dels, Seq(idCol), "left_anti"),
-                idCol, textCol)
-              store = next
-              fused = true
-            } else {
-              graft.ops.TextIndex.delete(sp, indexPath, dels, idCol)
-              val colliding = arrivals
-                .join(dels, Seq(idCol), "left_semi")
-                .localCheckpoint(true)
-              if (!colliding.isEmpty) {
-                // legacy store: fold NOW (the merge frees the id) so
-                // the update lands in this batch
-                require(compactEvery > 0,
-                  "bm25MaintenanceStream: a CDC update (delete + " +
-                    "re-arrival of one id in a micro-batch) on a " +
-                    "legacy store (no pending part) needs " +
-                    "compactEvery > 0 — live-docs deletion only " +
-                    "frees the id at a compaction fold")
-                graft.ops.AnnIndex.compactToNextGen(sp, indexPath,
-                  graft.ops.TextIndex.compact)
-              }
-              // the legacy branch mutated the store behind the handle
-              // (delete append, possibly a generation flip) — reopen
-              store = graft.ops.AnnIndex.open(sp, indexPath)
-            }
-          }
+        val opened = graft.ops.AnnIndex.open(sp, indexPath)
+        val dels =
+          if (opCol.isEmpty) None
+          else Some(batch.toDF().filter(col(opCol) === "delete")
+            .select(idCol).localCheckpoint(true)).filterNot(_.isEmpty)
+        // same-batch delete + re-arrival = a CDC UPDATE, staged on the
+        // keyed pending part; the whole micro-batch — deletes, staged
+        // updates, leftover appends — lands as ONE load + ONE
+        // multi-part append
+        val store = dels match {
+          case Some(d) => graft.ops.TextIndex.applyCdc(opened, d,
+              arrivals.join(d, Seq(idCol), "left_semi"),
+              arrivals.join(d, Seq(idCol), "left_anti"),
+              idCol, textCol)._2
+          case None => graft.ops.TextIndex.append(opened, arrivals,
+              idCol, textCol)._2
         }
-        if (!fused)
-          store = graft.ops.TextIndex.append(store, arrivals,
-            idCol, textCol)._2
         // the BM25 fold also APPLIES the deletion list and merges the
         // staged pending updates in (Lucene merge) — deleted ids free
         // up and df/N return to exact; the successor handle's manifest

@@ -175,8 +175,8 @@ class HnswSpec extends SparkSpec {
   }
 
   test("insertKnn(buildKnn(A), A, B) ≡ buildKnn(A ∪ B) row-for-row " +
-    "including cosines, for several splits; insertAdjacency matches " +
-    "buildAdjacency the same way") {
+    "including cosines, for several splits; the adjacency derived " +
+    "from the inserted kNN matches buildAdjacency the same way") {
     val all = clustered.toDF("id", "v")
     val bf = Hnsw.defaultBucketFn(nPlanes = 3, dim = 8, seed = 9)
     def knnSet(df: org.apache.spark.sql.DataFrame) =
@@ -203,8 +203,9 @@ class HnswSpec extends SparkSpec {
     def adjSet(df: org.apache.spark.sql.DataFrame) =
       df.select("lvl", "src", "dst").collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    assert(adjSet(Hnsw.insertAdjacency(oldKnn, a, b, "id", "v", 9, 2,
-        4, 2, bf)) ==
+    val inserted = Hnsw.insertKnn(oldKnn, a, b, "id", "v", 9, 2, 4, 2,
+      bf)
+    assert(adjSet(Hnsw.adjacencyFromKnn(inserted, all, "id", "v")) ==
       adjSet(Hnsw.buildAdjacency(all, "id", "v", 9, 2, 4, 2, bf)))
   }
 

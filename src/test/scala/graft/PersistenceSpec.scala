@@ -118,17 +118,17 @@ class PersistenceSpec extends SparkSpec {
     def knnSet(df: org.apache.spark.sql.DataFrame) =
       df.select("lvl", "src", "dst", "c").collect()
         .map(_.toSeq).toSet
-    val knnA = Hnsw.buildKnn(vecsA, "id", "v", 9, 2, 6, 2, bf)
     val dir = Files.createTempDirectory("graft-ann-append").toString +
       "/idx"
-    AnnIndex.save(dir, Map("knn" -> knnA),
-      Map("seed" -> "9", "kind" -> "hnsw"),
-      keys = Map("knn" -> Seq("lvl", "src")))
+    Hnsw.saveIndex(dir, vecsA, "id", "v", 9, 2, 6, 2, bf)
 
     // insert delta: only touched (lvl, src) groups cross the wire
-    val insDelta = Hnsw.insertKnnDelta(knnA, vecsA, vecsB, "id", "v",
-      9, 2, 6, 2, bf)
-    AnnIndex.append(dir, Map("knn" -> insDelta))
+    val (p0, _) = AnnIndex.load(spark, dir)
+    val (insDelta, memDelta) = Hnsw.insertKnnDeltaIndexed(p0("knn"),
+      p0("members"), p0("memdead"), vecsB, "id", "v", 9, 2, 6, 2, bf,
+      mb = AnnIndex.partBatches(spark, dir, "members"))
+    AnnIndex.append(dir, Map("knn" -> insDelta, "vectors" -> vecsB,
+      "members" -> memDelta))
     val (p1, _) = AnnIndex.load(spark, dir)
     val wantAB = knnSet(Hnsw.buildKnn(vecsAB, "id", "v", 9, 2, 6, 2, bf))
     assert(knnSet(p1("knn")) == wantAB)
@@ -137,10 +137,14 @@ class PersistenceSpec extends SparkSpec {
 
     // delete delta on top of the appended state (composition)
     val delIds = (0 until 280 by 7).map(_.toLong).toDF("id")
-    val knnAB = Hnsw.buildKnn(vecsAB, "id", "v", 9, 2, 6, 2, bf)
-    val delDelta = Hnsw.deleteKnnDelta(knnAB, vecsAB, delIds, "id",
-      "v", 9, 2, 6, 2, bf)
-    AnnIndex.append(dir, Map("knn" -> delDelta))
+    val (delDelta, dead) = Hnsw.deleteKnnDeltaIndexed(p1("knn"),
+      p1("members"), p1("memdead"), delIds, "id", m = 6,
+      th = AnnIndex.partBatches(spark, dir, "members"))
+    val vecType = p1("vectors").schema("v").dataType
+    AnnIndex.append(dir, Map("knn" -> delDelta,
+      "vectors" -> delIds.select(col("id"),
+        org.apache.spark.sql.functions.lit(null).cast(vecType).as("v")),
+      "memdead" -> dead))
     val (p2, _) = AnnIndex.load(spark, dir)
     val vecsKept = vecsAB.join(delIds, Seq("id"), "left_anti")
     val wantKept = knnSet(Hnsw.buildKnn(vecsKept, "id", "v", 9, 2, 6,
@@ -179,9 +183,9 @@ class PersistenceSpec extends SparkSpec {
     assert(fromDisk.nonEmpty &&
       fromDisk.forall(_(1).asInstanceOf[Double] > 0.0))
 
-    // compaction folds the 3-batch tombstoned history into one batch
-    // that still loads as exactly build(A∪B∖D)
-    AnnIndex.compact(spark, dir, dir + "_c")
+    // the ledger-aware fold squashes the 3-batch tombstoned history
+    // into one batch that still loads as exactly build(A∪B∖D)
+    Hnsw.compactIndex(spark, dir, dir + "_c")
     val (pc, _) = AnnIndex.load(spark, dir + "_c")
     assert(knnSet(pc("knn")) == wantKept)
   }

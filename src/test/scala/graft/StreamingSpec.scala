@@ -486,11 +486,7 @@ class StreamingSpec extends SparkSpec {
     val bf = Hnsw.defaultBucketFn(nPlanes = 3, dim = 8, seed = 9)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ann-stream").toString + "/idx"
-    AnnIndex.save(dir,
-      Map("knn" -> Hnsw.buildKnn(vecsA, "id", "v", 9, 2, 6, 2, bf),
-        "vectors" -> vecsA),
-      Map("seed" -> "9", "kind" -> "hnsw"),
-      keys = Map("knn" -> Seq("lvl", "src")))
+    Hnsw.saveIndex(dir, vecsA, "id", "v", 9, 2, 6, 2, bf)
     val input = MemoryStream[(Long, Array[Double])]
     val df = input.toDF().toDF("id", "v")
     val q = StreamOps.annIndexMaintenanceStream(df, "id", "v", dir,

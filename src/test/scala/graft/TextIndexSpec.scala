@@ -270,33 +270,6 @@ class TextIndexSpec extends SparkSpec {
     assert(stray.getMessage.contains("not in the delete set"))
   }
 
-  test("bm25MaintenanceStream CDC UPDATE on a LEGACY store (no " +
-    "pending part) without compaction enabled fails loudly instead " +
-    "of silently degrading to a delete") {
-    implicit val sqlCtx = spark.sqlContext
-    val path = dir("cdc-noupd")
-    // a pre-pending-layout store: the four original parts only
-    val legacyDocs = corpus.take(3).toDF("doc_id", "text")
-    AnnIndex.save(path,
-      TextIndex.deltaParts(legacyDocs, "doc_id", "text") +
-        ("deleted" -> legacyDocs.select(col("doc_id")).limit(0)),
-      Map("kind" -> "bm25", "id_col" -> "doc_id", "text_col" -> "text"))
-    val input = MemoryStream[(Long, String, String)]
-    val df = input.toDF().toDF("doc_id", "text", "op")
-    val q = StreamOps.bm25MaintenanceStream(df, "doc_id", "text", path,
-      compactEvery = 0, opCol = "op").start()
-    try {
-      input.addData(Seq((2L, null.asInstanceOf[String], "delete"),
-        (2L, "new text", "insert")))
-      val err = intercept[Exception] { q.processAllAvailable() }
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Seq.empty
-        else Option(t.getMessage).toSeq ++ messages(t.getCause)
-      assert(messages(err).exists(_.contains("compactEvery")),
-        s"wanted the loud CDC-update refusal, got: $err")
-    } finally q.stop()
-  }
-
   test("bm25MaintenanceStream CDC UPDATE BURST: N colliding batches " +
     "stage N pending appends and ZERO folds; search serves each " +
     "staged text immediately (latest wins); ONE fold then makes the " +
