@@ -1,30 +1,40 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.json4s.{JArray, JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
 
 /** Params-as-data persistence for ANN index artifacts — the
   * first-class save/load surface the index family was missing: the
   * HNSW directed kNN / adjacency ([[Hnsw]]), IVF centroids, PQ
   * codebooks and int8 scale tables are all plain DataFrames, so an
-  * index "file" is a directory of parquet part tables plus a string
-  * params table, mirroring the `graft.ml` stages' persistence pattern
+  * index "file" is a directory of parquet part tables plus one small
+  * JSON manifest, mirroring the `graft.ml` stages' persistence pattern
   * (everything the loader needs is DATA; no JVM serialization, any
   * engine can read an index back).
   *
   * Layout: `path/<part>/b<i>/` parquet per part BATCH (b0 at save,
-  * b1.. appended), `path/_params/` (param, value) strings,
-  * `path/_manifest/` (part, batches, key_cols) — written LAST, so a
-  * torn save has no manifest and `load` fails loudly. Every append
-  * writes its bumped manifest as a NEW `_manifest-v(N+1)/` directory
-  * (readers resolve the highest committed version; the prior version
-  * is kept one cycle, then pruned) — a torn APPEND (delta batch
-  * written, manifest version not yet committed) loads the PREVIOUS
-  * index intact, the retried append simply overwrites the orphan
-  * batch directory, and a load CONCURRENT with an append always sees
-  * a whole manifest (there is no delete→rewrite window on a shared
-  * manifest file).
+  * b1.. appended) and `path/_manifest/manifest.json`: the params, and
+  * per part its upsert key columns and the schema of every batch as
+  * written. The manifest is written LAST and committed by its
+  * `_SUCCESS` marker, so a torn save has no committed manifest and
+  * `load` fails loudly. It is read and written on the driver through
+  * the Hadoop `FileSystem` API, and readers scan each batch with its
+  * recorded schema: opening, loading and committing a store run no
+  * Spark job of their own (the log carries schema and table
+  * properties so readers never infer them from files — the Delta Lake
+  * design). Every append writes its bumped manifest as a NEW
+  * `_manifest-v(N+1)/` directory (readers resolve the highest
+  * committed version; the prior version is kept one cycle, then
+  * pruned) — a torn APPEND (delta batch written, manifest version not
+  * yet committed) loads the PREVIOUS index intact, the retried append
+  * simply overwrites the orphan batch directory, and a load
+  * CONCURRENT with an append always sees a whole manifest (there is
+  * no delete→rewrite window on a shared manifest file).
   *
   * Incremental maintenance ([[append]]): a part saved with `keys`
   * declared (e.g. the kNN's `(lvl, src)`) is a KEYED part — `load`
@@ -110,31 +120,95 @@ object AnnIndex {
             }
           })
         }
-        futs.foreach(_.get()) // rethrows the first failure
-      } catch {
-        case e: java.util.concurrent.ExecutionException =>
-          sc.cancelJobGroup(group) // stop siblings, not just threads
-          throw e.getCause
-        case e: InterruptedException =>
-          sc.cancelJobGroup(group)
-          throw e
+        awaitAll(futs, () => sc.cancelJobGroup(group))
       } finally pool.shutdownNow()
     }
   }
 
+  /** Wait for every part write, rethrowing the first failure. ANY
+    * failure — a failed write (its cause is rethrown), a cancelled
+    * future, an interrupt of the waiting thread, an Error — first runs
+    * `cancel`, which stops the siblings' jobs, not just their threads. */
+  private[graft] def awaitAll(
+      futs: Seq[java.util.concurrent.Future[Unit]],
+      cancel: () => Unit): Unit =
+    try futs.foreach(_.get())
+    catch {
+      case e: Throwable =>
+        cancel()
+        throw (e match {
+          case ee: java.util.concurrent.ExecutionException
+              if ee.getCause != null => ee.getCause
+          case other => other
+        })
+    }
+
+  private val WriteConcurrencyKey = "spark.graft.index.writeConcurrency"
+
   private def writeConcurrency(spark: SparkSession, n: Int): Int = {
-    val conf = spark.conf
-      .get("spark.graft.index.writeConcurrency", "").trim
-    if (conf.nonEmpty) math.max(1, math.min(conf.toInt, n))
-    else math.min(n, 4)
+    val conf = spark.conf.get(WriteConcurrencyKey, "").trim
+    if (conf.isEmpty) math.min(n, 4)
+    else {
+      val c = conf.toIntOption
+      require(c.isDefined,
+        s"$WriteConcurrencyKey must be an integer, got '$conf'")
+      math.max(1, math.min(c.get, n))
+    }
   }
 
-  private def writeManifest(dir: String,
-      rows: Seq[(String, Int, String)], spark: SparkSession): Unit = {
-    import spark.implicits._
-    rows.sortBy(_._1).toDF("part", "batches", "key_cols")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
+  /** One part's manifest entry: its upsert key columns (comma-joined,
+    * "" = un-keyed) and the schema of every batch as written — b<i>'s
+    * schema is `schemas(i)`, so the batch count is `schemas.size`. */
+  private final case class PartEntry(part: String, keyCols: String,
+      schemas: Seq[StructType]) {
+    def batches: Int = schemas.size
   }
+
+  private val ManifestFile = "manifest.json"
+
+  /** Commit one manifest version: `dir/manifest.json` (params plus
+    * every part's `batches`, `key_cols` and per-batch schemas), then
+    * the `_SUCCESS` marker LAST — the marker is the commit, so a torn
+    * write is an uncommitted version readers never resolve. Written on
+    * the driver through the Hadoop `FileSystem` API: no Spark job. A
+    * leftover directory (a torn earlier attempt) is replaced whole. */
+  private def writeManifest(spark: SparkSession, dir: String,
+      entries: Seq[PartEntry], params: Map[String, String]): Unit = {
+    val json = JObject(
+      "params" -> JObject(params.toSeq.sortBy(_._1).map {
+        case (k, v) => k -> (JString(v): JValue)
+      }: _*),
+      "parts" -> JArray(entries.sortBy(_.part).map { e =>
+        JObject(
+          "part" -> JString(e.part),
+          "batches" -> JInt(e.batches),
+          "key_cols" -> JString(e.keyCols),
+          "schemas" ->
+            JArray(e.schemas.map(s => JsonMethods.parse(s.json)).toList))
+      }.toList))
+    val (fs, dirP) = hadoopFs(spark, dir)
+    fs.delete(dirP, true)
+    val out = fs.create(new Path(dirP, ManifestFile), false)
+    try out.write(JsonMethods.compact(JsonMethods.render(json))
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    fs.create(new Path(dirP, "_SUCCESS"), false).close()
+  }
+
+  /** A batch's schema as a reader of its parquet files resolves it:
+    * file relations are all-nullable, so the recorded schema is the
+    * written one with every field, element and value made nullable. */
+  private def asRead(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asRead(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(asRead(e), containsNull = true)
+    case MapType(k, v, _) =>
+      MapType(asRead(k), asRead(v), valueContainsNull = true)
+    case other => other
+  }
+
+  private def batchSchema(df: DataFrame): StructType =
+    asRead(df.schema).asInstanceOf[StructType]
 
   /** Manifests are VERSIONED like generations: a fresh [[save]] writes
     * `_manifest` (version 0); every [[append]] writes the bumped
@@ -147,12 +221,11 @@ object AnnIndex {
     * a concurrent reader could silently fall back a generation, or
     * fail outright on a never-compacted root). Committed versions
     * under `dir`, as (version, concrete directory). */
-  private def committedManifests(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[(Int, String)] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val legacy =
-      if (fs.exists(
-          new org.apache.hadoop.fs.Path(s"$dir/_manifest/_SUCCESS")))
+  private def committedManifests(fs: FileSystem, dir: String)
+      : Seq[(Int, String)] = {
+    val p = new Path(dir)
+    val v0 =
+      if (fs.exists(new Path(s"$dir/_manifest/_SUCCESS")))
         Seq(0 -> s"$dir/_manifest")
       else Seq.empty
     val versioned =
@@ -161,31 +234,29 @@ object AnnIndex {
         case s if s.isDirectory =>
           s.getPath.getName match {
             case manifestVName(n) if fs.exists(
-                new org.apache.hadoop.fs.Path(
-                  s"$dir/${s.getPath.getName}/_SUCCESS")) =>
+                new Path(s"$dir/${s.getPath.getName}/_SUCCESS")) =>
               Some(n.toInt -> s"$dir/${s.getPath.getName}")
             case _ => None
           }
       }.flatten
-    legacy ++ versioned
+    v0 ++ versioned
   }
 
   private def hadoopFs(spark: SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
+      : (FileSystem, Path) = {
+    val p = new Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
   /** True once a directory's index layout is COMPLETE: some manifest
-    * version's job committed (the `_SUCCESS` marker the committer
-    * writes last). This is the generation-flip test — a torn fold has
+    * version committed (the `_SUCCESS` marker [[writeManifest]] writes
+    * last). This is the generation-flip test — a torn fold has
     * no committed manifest and is invisible. */
-  private def manifestCommitted(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Boolean = committedManifests(fs, dir).nonEmpty
+  private def manifestCommitted(fs: FileSystem, dir: String): Boolean =
+    committedManifests(fs, dir).nonEmpty
 
   /** Generation numbers present under `root` (committed or not). */
-  private def listGens(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Int] =
+  private def listGens(fs: FileSystem, root: Path): Seq[Int] =
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq.collect {
       case s if s.isDirectory =>
@@ -241,45 +312,84 @@ object AnnIndex {
     // older goes — gen dirs below N, and the root layout once the
     // prior generation is itself a gen dir
     listGens(fs, rootP).filter(_ < curGen).foreach { g =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/gen-$g"), true)
+      fs.delete(new Path(s"$root/gen-$g"), true)
     }
     if (curGen >= 1 && manifestCommitted(fs, root)) {
-      readManifest(spark, root).foreach { case (n, _, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$root/$n"), true)
+      readManifest(spark, root)._1.foreach { e =>
+        fs.delete(new Path(s"$root/${e.part}"), true)
       }
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/_params"), true)
       // every manifest version of the retired root layout goes
       committedManifests(fs, root).foreach { case (_, d) =>
-        fs.delete(new org.apache.hadoop.fs.Path(d), true)
+        fs.delete(new Path(d), true)
       }
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/_manifest"), true)
+      fs.delete(new Path(s"$root/_manifest"), true)
     }
   }
 
+  /** The highest committed manifest version under `path`, as its
+    * part entries and params. Fails loudly, naming the path, when no
+    * version committed (not an index, or a torn save), and naming the
+    * manifest file when it cannot be read or parsed as a manifest. */
   private def readManifest(spark: SparkSession, path: String)
-      : Seq[(String, Int, String)] = {
+      : (Seq[PartEntry], Map[String, String]) = {
     val (fs, _) = hadoopFs(spark, path)
-    // highest committed version wins (v0 = the legacy `_manifest`);
-    // fall back to the plain path so a genuinely-missing manifest
-    // still fails with the familiar parquet error
     val dir = committedManifests(fs, path).sortBy(-_._1).headOption
-      .map(_._2).getOrElse(s"$path/_manifest")
-    spark.read.parquet(dir)
-      .select("part", "batches", "key_cols")
-      .collect()
-      .map { r =>
-        val n = r.getString(0)
-        // re-validate what we read: a corrupted/crafted manifest must
-        // not be able to point part reads at arbitrary relative paths
-        requireValidName(n)
-        (n, r.getInt(1), r.getString(2))
-      }.toSeq
+      .map(_._2).getOrElse(throw new IllegalArgumentException(
+        s"AnnIndex: no committed manifest under $path (not an index, " +
+          "or a torn save)"))
+    val file = new Path(dir, ManifestFile)
+    val (entries, params) =
+      try {
+        val in = fs.open(file)
+        try decodeManifest(new String(in.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8))
+        finally in.close()
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          throw new IllegalStateException(
+            s"AnnIndex: manifest $file is unreadable: ${e.getMessage}", e)
+      }
+    // re-validate what we read: a corrupted/crafted manifest must not
+    // be able to point part reads at arbitrary relative paths
+    entries.foreach(e => requireValidName(e.part))
+    (entries, params)
   }
 
-  /** Write a fresh index: every part as batch `b0`, params, then the
-    * manifest LAST. `keys(part)` declares the upsert key columns that
-    * make the part appendable via [[append]] (must be a subset of the
-    * part's columns); undeclared parts are plain union-of-batches. */
+  private def decodeManifest(text: String)
+      : (Seq[PartEntry], Map[String, String]) = {
+    def bad(what: String) = throw new IllegalStateException(what)
+    def str(v: JValue, what: String): String = v match {
+      case JString(x) => x
+      case _          => bad(s"$what is not a string")
+    }
+    val root = JsonMethods.parse(text)
+    val params = root \ "params" match {
+      case JObject(kvs) => kvs.map { case (k, v) => k -> str(v, k) }.toMap
+      case _            => bad("no params object")
+    }
+    val entries = root \ "parts" match {
+      case JArray(ps) => ps.map { p =>
+        val name = str(p \ "part", "part")
+        val schemas = p \ "schemas" match {
+          case JArray(ss) => ss.map(j => DataType.fromJson(
+            JsonMethods.compact(JsonMethods.render(j)))
+            .asInstanceOf[StructType])
+          case _ => bad(s"part '$name' has no schemas array")
+        }
+        if (p \ "batches" != JInt(schemas.size))
+          bad(s"part '$name' batches != its ${schemas.size} schemas")
+        PartEntry(name, str(p \ "key_cols", "key_cols"), schemas)
+      }
+      case _ => bad("no parts array")
+    }
+    (entries, params)
+  }
+
+  /** Write a fresh index: every part as batch `b0`, then the manifest
+    * (params, keys and each part's b0 schema) LAST. `keys(part)`
+    * declares the upsert key columns that make the part appendable via
+    * [[append]] (must be a subset of the part's columns); undeclared
+    * parts are plain union-of-batches. */
   def save(path: String, parts: Map[String, DataFrame],
       params: Map[String, String],
       keys: Map[String, Seq[String]] = Map.empty): Unit = {
@@ -297,7 +407,6 @@ object AnnIndex {
           "(tombstones are all-null non-key rows)")
     }
     val spark = parts.head._2.sparkSession
-    import spark.implicits._
     // a fresh save writes the LITERAL path; refuse if a committed
     // generation already shadows it (readers resolve to the gen dir,
     // so the save would be silently invisible)
@@ -305,19 +414,14 @@ object AnnIndex {
       s"AnnIndex.save: $path already has committed generations — " +
         "append/compactToNextGen maintain a generational index; a " +
         "fresh save needs a fresh root")
-    // the params table is independent of every part — it rides the
-    // same overlapped-write pool; only the manifest must land LAST
     writeAll(spark, parts.toSeq.sortBy(_._1).map { case (name, df) =>
       () => df.write.mode("overwrite").parquet(s"$path/$name/b0")
-    } :+ { () =>
-      params.toSeq.sortBy(_._1).toDF("param", "value")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
-      ()
     })
-    writeManifest(s"$path/_manifest",
-      parts.keys.toSeq.map(n =>
-        (n, 1, keys.get(n).map(_.mkString(",")).getOrElse(""))),
-      spark)
+    writeManifest(spark, s"$path/_manifest",
+      parts.toSeq.map { case (n, df) =>
+        PartEntry(n, keys.get(n).map(_.mkString(",")).getOrElse(""),
+          Seq(batchSchema(df)))
+      }, params)
   }
 
   /** Delta-sized incremental write: each delta part lands as the next
@@ -334,28 +438,25 @@ object AnnIndex {
   }
 
   /** [[append]] against an OPEN handle: skips the per-call generation
-    * resolve, manifest scan and per-part schema footer re-reads (the
-    * handle already carries all three), and returns the successor
-    * handle so a maintenance loop chains delete → insert → compact
-    * probes off ONE store snapshot per micro-batch. */
+    * resolve and manifest read (the handle already carries both), and
+    * returns the successor handle so a maintenance loop chains delete →
+    * insert → compact probes off ONE store snapshot per micro-batch. */
   def appendTo(store: Store, deltaParts: Map[String, DataFrame])
       : Store = {
     require(deltaParts.nonEmpty, "AnnIndex.append: no delta parts")
     val spark = store.spark
     val path = store.path
-    val manifest = store.manifest
-    val byName = manifest.map(e => e._1 -> e).toMap
+    val byName = store.entries.map(e => e.part -> e).toMap
     deltaParts.foreach { case (n, df) =>
       requireValidName(n)
       require(byName.contains(n),
         s"AnnIndex.append: part '$n' not in the saved index " +
-          s"(${manifest.map(_._1).mkString(", ")})")
+          s"(${store.entries.map(_.part).mkString(", ")})")
       // schema drift fails at APPEND time, not at some future load's
       // unionByName — the batch directories of one part must stay
-      // column-compatible forever. The handle's resolved part relation
-      // carries exactly the stored columns, so this needs NO fresh
-      // footer read.
-      val stored = store.parts(n).columns.toSet
+      // column-compatible forever. The manifest records the schema of
+      // the part's last batch, so this reads no file.
+      val stored = byName(n).schemas.last.fieldNames.toSet
       require(df.columns.toSet == stored,
         s"AnnIndex.append: part '$n' delta columns " +
           s"${df.columns.sorted.mkString("[", ",", "]")} != stored " +
@@ -363,7 +464,7 @@ object AnnIndex {
     }
     writeAll(spark, deltaParts.toSeq.sortBy(_._1).map { case (name, df) =>
       () => df.write.mode("overwrite")
-        .parquet(s"$path/$name/b${byName(name)._2}")
+        .parquet(s"$path/$name/b${byName(name).batches}")
     })
     // the bumped manifest lands as a NEW version directory (its own
     // _SUCCESS commits it), then versions older than the prior one are
@@ -374,29 +475,32 @@ object AnnIndex {
     val (fs, _) = hadoopFs(spark, path)
     val versions = committedManifests(fs, path).map(_._1)
     val cur = if (versions.isEmpty) 0 else versions.max
-    val bumped = manifest.map { case (n, b, ks) =>
-      (n, if (deltaParts.contains(n)) b + 1 else b, ks)
+    val bumped = store.entries.map { e =>
+      deltaParts.get(e.part).fold(e)(df =>
+        e.copy(schemas = e.schemas :+ batchSchema(df)))
     }
-    writeManifest(s"$path/_manifest-v${cur + 1}", bumped, spark)
+    writeManifest(spark, s"$path/_manifest-v${cur + 1}", bumped,
+      store.params)
     versions.filter(_ < cur).foreach { v =>
       val d = if (v == 0) s"$path/_manifest" else s"$path/_manifest-v$v"
-      fs.delete(new org.apache.hadoop.fs.Path(d), true)
+      fs.delete(new Path(d), true)
     }
-    new Store(spark, path, bumped)
+    new Store(spark, path, bumped, store.params)
   }
 
   /** Batch-resolved part relations for a manifest already in hand:
     * plain union for un-keyed parts; latest-batch-wins per key group
-    * then tombstone drop for keyed parts. Lazy scans throughout. */
+    * then tombstone drop for keyed parts. Lazy scans throughout, each
+    * batch with its recorded schema (no schema-inference job). */
   private def partsFrom(spark: SparkSession, path: String,
-      manifest: Seq[(String, Int, String)]): Map[String, DataFrame] =
-    manifest.map { case (name, batches, keyCols) =>
-      val union = (0 until batches).map { b =>
-        spark.read.parquet(s"$path/$name/b$b")
+      entries: Seq[PartEntry]): Map[String, DataFrame] =
+    entries.map { case e @ PartEntry(name, keyCols, schemas) =>
+      val union = schemas.zipWithIndex.map { case (schema, b) =>
+        spark.read.schema(schema).parquet(s"$path/$name/b$b")
           .withColumn(batchCol, lit(b))
       }.reduce(_ unionByName _)
       val resolved =
-        if (keyCols.isEmpty || batches == 1) {
+        if (keyCols.isEmpty || e.batches == 1) {
           if (keyCols.isEmpty) union.drop(batchCol)
           else dropTombstones(union, keyCols).drop(batchCol)
         } else {
@@ -414,19 +518,29 @@ object AnnIndex {
   /** An OPEN index: generation resolved and manifest read ONCE, part
     * relations and params derived from that snapshot. The maintenance
     * loops open one handle per micro-batch where they previously paid
-    * a fresh resolveGen + manifest scan + params collect for EVERY
-    * load / partBatches / maxBatches / append call in the batch
-    * (3–4 manifest jobs and per-part schema footer re-reads per
-    * micro-batch at sf0.1 — pure per-batch fixed cost, guide §1.2).
+    * a fresh resolveGen + manifest read for EVERY load / partBatches /
+    * maxBatches / append call in the batch (pure per-batch fixed
+    * cost, guide §1.2). Opening reads one small JSON file on the
+    * driver and building `parts` reads no file footer, so neither
+    * runs a Spark job.
     * Handles are snapshots: [[appendTo]] returns the successor handle;
     * a stale handle keeps reading its own committed state (the same
     * guarantee concurrent readers already have). */
   final class Store private[AnnIndex] (val spark: SparkSession,
-      val path: String, val manifest: Seq[(String, Int, String)]) {
+      val path: String, private[AnnIndex] val entries: Seq[PartEntry],
+      val params: Map[String, String]) {
+    /** (part, batches, key_cols) per part, as committed. */
+    val manifest: Seq[(String, Int, String)] =
+      entries.map(e => (e.part, e.batches, e.keyCols))
     /** Batch-resolved part relations (see [[load]]). */
     lazy val parts: Map[String, DataFrame] =
-      partsFrom(spark, path, manifest)
-    lazy val params: Map[String, String] = readParams(spark, path)
+      partsFrom(spark, path, entries)
+    /** The schema recorded for each batch of `part`, b0 first. */
+    private[graft] def batchSchemas(part: String): Seq[StructType] =
+      entries.find(_.part == part).map(_.schemas).getOrElse(
+        throw new IllegalArgumentException(
+          s"Store.batchSchemas: no part '$part' in " +
+            s"(${manifest.map(_._1).mkString(", ")})"))
     def partBatches(part: String): Int =
       manifest.find(_._1 == part).map(_._2).getOrElse(
         throw new IllegalArgumentException(
@@ -438,16 +552,12 @@ object AnnIndex {
     }.toMap
   }
 
-  private def readParams(spark: SparkSession, path: String)
-      : Map[String, String] =
-    spark.read.parquet(s"$path/_params")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-
   /** Open the index at `root`: ONE generation resolve + ONE manifest
     * read backing every accessor on the returned handle. */
   def open(spark: SparkSession, root: String): Store = {
     val path = resolveGen(spark, root)
-    new Store(spark, path, readManifest(spark, path))
+    val (entries, params) = readManifest(spark, path)
+    new Store(spark, path, entries, params)
   }
 
   /** Read the index back: batches resolved per the manifest — plain
@@ -483,7 +593,8 @@ object AnnIndex {
 
   /** Largest batch-directory count across parts — the compaction
     * trigger signal (read cost grows with this number, measured in
-    * bench/ANN_LOAD_CURVE_SF1_r12.json). One small manifest read. */
+    * bench/ANN_LOAD_CURVE_SF1_r12.json). One small manifest read on
+    * the driver. */
   def maxBatches(spark: SparkSession, root: String): Int =
     open(spark, root).maxBatches
 

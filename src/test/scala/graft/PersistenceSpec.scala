@@ -457,9 +457,14 @@ class PersistenceSpec extends SparkSpec {
     // index directory refuses to load (the save-side name rule is
     // re-applied to whatever the manifest claims) — planted as the
     // HIGHEST manifest version, which is the one readers resolve
-    Seq(("../evil", 1, "")).toDF("part", "batches", "key_cols")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/_manifest-v99")
+    val crafted = java.nio.file.Paths.get(s"$dir/_manifest-v99")
+    Files.createDirectories(crafted)
+    Files.writeString(crafted.resolve("manifest.json"),
+      """{"params":{"kind":"ivf"},"parts":[{"part":"../evil",""" +
+        """"batches":1,"key_cols":"","schemas":[{"type":"struct",""" +
+        """"fields":[{"name":"k","type":"long","nullable":true,""" +
+        """"metadata":{}}]}]}]}""")
+    Files.createFile(crafted.resolve("_SUCCESS"))
     intercept[IllegalArgumentException] {
       AnnIndex.load(spark, dir)
     }
