@@ -2555,9 +2555,10 @@ object SparkEntry {
       // re-arrival of the same id in one batch — batch 1 even carries
       // TWO versions per id, resolved to the highest `seq`
       // deterministically). With compactEvery=0 the burst forces ZERO
-      // Lucene merges: every replacement text is STAGED on the keyed
-      // pending part and already searchable; ONE explicit fold then
-      // merges the burst, and the search FROM DISK must equal scoring
+      // Lucene merges: every replacement text is indexed as a delta
+      // append (its old version retired on the deletion ledger) and
+      // already searchable; ONE explicit fold then drops the retired
+      // rows, and the search FROM DISK must equal scoring
       // the updated corpus from scratch (the oracle replays the
       // updates as a CASE over `documents` + the q257 BM25 chain).
       import java.nio.file.{Files, StandardCopyOption}
@@ -5625,10 +5626,11 @@ object SparkEntry {
         |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
 
     // q258: the CDC-update lifecycle — the oracle applies the two
-    // update slices as a CASE over `documents` (batch 1's two staged
-    // versions resolve to the highest seq = ' updated beta'; batch 2
-    // appends ' updated gamma') and replays the q257 BM25 chain over
-    // the UPDATED corpus. Staged pending + one fold ≡ full recompute.
+    // update slices as a CASE over `documents` (batch 1's two
+    // candidate versions resolve to the highest seq = ' updated beta';
+    // batch 2 appends ' updated gamma') and replays the q257 BM25 chain
+    // over the UPDATED corpus. Ledger + delta updates + one fold ≡
+    // full recompute.
     "q258_bm25_cdc_update" ->
       """WITH u AS (
         |  SELECT doc_id,

@@ -414,6 +414,16 @@ object AnnIndex {
       s"AnnIndex.save: $path already has committed generations — " +
         "append/compactToNextGen maintain a generational index; a " +
         "fresh save needs a fresh root")
+    // ...and refuse an APPENDED root: the save would commit version 0
+    // while readers keep resolving the higher committed version, so
+    // loads would mix the new b0 with the old store's later batches
+    // and params
+    val (fs, _) = hadoopFs(spark, path)
+    val appended = committedManifests(fs, path).map(_._1).filter(_ >= 1)
+    require(appended.isEmpty,
+      s"AnnIndex.save: $path holds committed manifest version " +
+        s"${appended.maxOption.getOrElse(0)} of an appended index — a " +
+        "fresh save needs a fresh root")
     writeAll(spark, parts.toSeq.sortBy(_._1).map { case (name, df) =>
       () => df.write.mode("overwrite").parquet(s"$path/$name/b0")
     })
@@ -604,6 +614,23 @@ object AnnIndex {
   def partBatches(spark: SparkSession, root: String,
       part: String): Int =
     open(spark, root).partBatches(part)
+
+  /** Live rows of an un-keyed part under a deletion LEDGER `(key,
+    * th)`: a row stamped `mb` (the part's batch count when it was
+    * written) is dead iff `mb < max th` over its key's ledger rows.
+    * Deleting appends ledger rows, never rewrites a part; a same-batch
+    * or later re-insert writes rows with `mb` ≥ every prior threshold
+    * and stays live, so updates need no ledger cleanup. The ledger is
+    * deletions-since-compact — broadcast-sized — and a fold keeps the
+    * survivors, resets `mb` to 0 and empties it ([[Hnsw.compactIndex]],
+    * [[TextIndex.compact]]). */
+  def liveRows(rows: DataFrame, ledger: DataFrame, key: String)
+      : DataFrame = {
+    val th = ledger.groupBy(col(key)).agg(max(col("th")).as("__th"))
+    rows.join(broadcast(th), Seq(key), "left")
+      .filter(col("__th").isNull || col("mb") >= col("__th"))
+      .drop("__th")
+  }
 
   /** Tombstone rows (all non-key columns null) delete their group. */
   private def dropTombstones(df: DataFrame, keyCols: String)

@@ -383,7 +383,8 @@ object Hnsw {
     * (ONE comparable pruning key; hash collisions only widen the
     * pruned superset — the exact (lvl, band, bkt) equi-join follows)
     * and `mb` is the members part's batch number at write time, the
-    * version the deletion ledger thresholds against. Membership is a
+    * version the deletion ledger `memdead (vid, th)` thresholds
+    * against ([[AnnIndex.liveRows]]). Membership is a
     * pure function of (id, vec, seed), so it is written ONCE per
     * vector at save/insert time and probed forever after — the
     * alternative (re-hashing the stored corpus per micro-batch) makes
@@ -397,21 +398,6 @@ object Hnsw {
       .withColumn("cell", xxhash64(col("lvl"), col("band"), col("bkt")))
       .withColumn("mb", lit(mb))
       .select("lvl", "band", "bkt", "cell", "vid", "v", "mb")
-
-  /** Live rows of a stored membership part under the deletion ledger
-    * `memdead (vid, th)`: a member row is dead iff its `mb` precedes
-    * some ledger threshold for its vid (`mb < max th`). Deleting marks
-    * (one ledger append, never a member rewrite); re-inserting the
-    * same id later writes fresh rows with `mb` ≥ every prior
-    * threshold, so updates need no ledger cleanup. The ledger is
-    * deletions-since-compact — broadcast-sized (the
-    * [[TextIndex]] live-docs discipline, applied to membership). */
-  def liveMembers(members: DataFrame, memdead: DataFrame): DataFrame = {
-    val th = memdead.groupBy(col("vid")).agg(max(col("th")).as("__th"))
-    members.join(broadcast(th), Seq("vid"), "left")
-      .filter(col("__th").isNull || col("mb") >= col("__th"))
-      .drop("__th")
-  }
 
   /** Seed a maintenance-ready persisted index: the kNN (keyed), the
     * corpus vectors (keyed — CDC tombstones need it), the banded
@@ -463,8 +449,9 @@ object Hnsw {
     require(parts.contains("members") && parts.contains("memdead"),
       s"Hnsw.compactIndex: $src has no membership parts — use " +
         "AnnIndex.compact")
-    val members = liveMembers(parts("members"), parts("memdead"))
-      .withColumn("mb", lit(0))
+    val members =
+      AnnIndex.liveRows(parts("members"), parts("memdead"), "vid")
+        .withColumn("mb", lit(0))
     AnnIndex.save(dst,
       parts ++ Map("knn" -> sortedByKey(parts("knn"), "src"),
         "members" -> sortedByKey(members, "cell"),
@@ -495,7 +482,8 @@ object Hnsw {
     * query terms). */
   def memberProbe(members: DataFrame, memdead: DataFrame,
       batchMembers: DataFrame): DataFrame =
-    pruneBy(liveMembers(members, memdead), "cell", batchMembers, "cell")
+    pruneBy(AnnIndex.liveRows(members, memdead, "vid"), "cell",
+      batchMembers, "cell")
 
   /** DELTA form of [[insertKnn]] for [[AnnIndex.append]], answered from
     * the PERSISTED membership part: only the (lvl, src) groups whose
@@ -568,7 +556,7 @@ object Hnsw {
       .distinct().localCheckpoint(true)
     val newDead = del.select(col("vid"),
       lit(th).cast("int").as("th"))
-    val live = liveMembers(members, memdead)
+    val live = AnnIndex.liveRows(members, memdead, "vid")
     val delMem = pruneBy(live, "vid", del, "vid")
       .localCheckpoint(true)
     val liveAfter = live.join(del, Seq("vid"), "left_anti")

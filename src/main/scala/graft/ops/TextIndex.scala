@@ -15,13 +15,12 @@ import org.apache.spark.sql.functions._
   * ANN-specific), and a query resolves them with vocabulary-bounded
   * rollups — never a corpus rescan.
   *
-  * Parts (all un-keyed — plain batch unions, append cost = the delta):
-  *  - `postings` (idCol, term, tf, dl): one row per distinct
+  * Parts (un-keyed — plain batch unions, append cost = the delta):
+  *  - `postings` (idCol, term, tf, dl, mb): one row per distinct
   *    (doc, term), with the doc length DENORMALIZED onto the posting
   *    (the Lucene norms idiom) so scoring never joins a doc table;
-  *  - `docs` (idCol, dl): the stored-id set — the maintenance
-  *    stream's re-arrival anti-join target, and the CDC hook a
-  *    delete/compact pass would rewrite;
+  *  - `docs` (idCol, dl, mb): the stored-id set — the maintenance
+  *    stream's re-arrival anti-join target;
   *  - `termdf` (term, df_delta): per-batch document frequencies —
   *    exact because re-arrivals are dropped before the delta is
   *    computed, so SUM(df_delta) IS df;
@@ -29,7 +28,15 @@ import org.apache.spark.sql.functions._
   *    from summing this batches-sized table. len_sum is an exact
   *    integer sum, so len_sum/N equals the double-avg of
   *    integer-valued lengths ([[TextOps.bm25]]'s q94 invariant) in
-  *    every summation order.
+  *    every summation order;
+  *  - `deleted` (idCol, th): the deletion LEDGER — the same rule as
+  *    the HNSW membership ledger ([[AnnIndex.liveRows]]): a `postings`
+  *    or `docs` row is live iff its `mb` (the `postings` batch count
+  *    when it was written) is ≥ every `th` of its id. Deletes and CDC
+  *    updates are ledger rows plus ordinary delta appends, so a search
+  *    between folds pays one broadcast ledger join and nothing else;
+  *  - `pending` (idCol, textCol): keyed on the id and always empty —
+  *    kept so the layout readers name stays the same.
   *
   * Query plan shape at 100 TB: `search` filters `postings` and
   * `termdf` on the query's terms BEFORE any join or agg — parquet
@@ -76,8 +83,7 @@ object TextIndex {
     * micro-batch delta to one file while an index-sized compact
     * write spreads across the cluster. Applied at INDEX-SIZED write
     * sites only (save/compact, plus bulk-regime appends past
-    * [[ClusterDeltaMinDocs]]) — never to [[search]]'s query-time
-    * pending delta, and NOT to micro-batch delta appends: a
+    * [[ClusterDeltaMinDocs]]) — NOT to micro-batch delta appends: a
     * `repartitionByRange` costs a range-sampling job + an exchange
     * PER PART PER BATCH, and a batch-sized delta lands in a couple of
     * row groups whatever its order, so there is nothing for the
@@ -116,39 +122,33 @@ object TextIndex {
   /** The four delta parts for a batch of NEW documents (caller
     * guarantees ids are not already stored — the maintenance stream
     * anti-joins against `docs` first). Rows with empty/whitespace text
-    * are excluded from every statistic, matching [[TextOps.bm25]]. */
-  def deltaParts(docs: DataFrame, idCol: String, textCol: String,
-      pin: Boolean = true): Map[String, DataFrame] = {
+    * are excluded from every statistic, matching [[TextOps.bm25]].
+    * `postings` and `docs` come back without the `mb` stamp; the write
+    * sites add it ([[stamped]]). */
+  def deltaParts(docs: DataFrame, idCol: String, textCol: String)
+      : Map[String, DataFrame] = {
     val d = docs.filter(length(trim(col(textCol))) > 0)
       .select(col(idCol), col(textCol))
     // The four parts are all derived from two relations — (id, dl) and
-    // the (id, term, tf, dl) postings — and every caller materializes
-    // ALL of them (save/append write the four parts; search's pending
-    // path reads three). Without pinning, the tokenize→explode→agg
-    // chain re-ran once PER PART (guide §1.2: don't compute things
-    // twice); localCheckpoint runs it once and the derived rollups
-    // (termdf, stats) fold over the pinned rows. termdf counts
-    // postings rows per term, which equals tf rows per term exactly:
-    // the tf→lens join is 1:1 (both sides derive from the same
-    // non-empty-text rows, one lens row per id).
-    //
-    // `pin = false` is the QUERY-TIME variant for [[search]]'s pending
-    // path: the pending relation is broadcast-sized, and an eager
-    // checkpoint per SEARCH would run blocking materialization jobs at
-    // plan-build time and pin blocks in executor storage until GC — a
-    // hot query loop between folds would accumulate them. Write paths
-    // keep the pin (every part is materialized there anyway).
-    def maybePin(df: DataFrame): DataFrame =
-      if (pin) df.localCheckpoint(true) else df
-    val lens = maybePin(d.select(col(idCol),
-      TextOps.tokenCount(col(textCol)).cast("long").as("dl")))
+    // the (id, term, tf, dl) postings — and every caller writes ALL of
+    // them. Without pinning, the tokenize→explode→agg chain re-ran
+    // once PER PART (guide §1.2: don't compute things twice);
+    // localCheckpoint runs it once and the derived rollups (termdf,
+    // stats) fold over the pinned rows. termdf counts postings rows
+    // per term, which equals tf rows per term exactly: the tf→lens
+    // join is 1:1 (both sides derive from the same non-empty-text
+    // rows, one lens row per id).
+    val lens = d.select(col(idCol),
+      TextOps.tokenCount(col(textCol)).cast("long").as("dl"))
+      .localCheckpoint(true)
     val tf = d
       .select(col(idCol),
         explode(TextOps.tokens(lower(col(textCol)))).as("term"))
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
-    val postings = maybePin(tf.join(lens, Seq(idCol))
-      .select(col(idCol), col("term"), col("tf"), col("dl")))
+    val postings = tf.join(lens, Seq(idCol))
+      .select(col(idCol), col("term"), col("tf"), col("dl"))
+      .localCheckpoint(true)
     val termdf = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df_delta"))
     val stats = lens.agg(count(lit(1)).as("n_docs"),
@@ -157,59 +157,57 @@ object TextIndex {
       "termdf" -> termdf, "stats" -> stats)
   }
 
+  /** Stamp the per-doc parts with `mb`, the `postings` batch count at
+    * write time — the version the `deleted (idCol, th)` ledger
+    * thresholds against ([[AnnIndex.liveRows]]): 0 at [[save]] and
+    * [[compact]], the store's current `postings` batch count on an
+    * append. */
+  private def stamped(d: Map[String, DataFrame], mb: Int)
+      : Map[String, DataFrame] =
+    d ++ Seq("postings", "docs").map(p => p -> d(p).withColumn("mb", lit(mb)))
+
+  /** The empty `deleted` ledger and `pending` part every fresh store
+    * starts with. `pending (idCol, textCol)` stays in the layout, empty
+    * and keyed on the id, for readers that name it; nothing appends to
+    * it or reads it. */
+  private def emptyParts(docs: DataFrame, idCol: String,
+      textCol: String): Map[String, DataFrame] =
+    Map("deleted" -> docs.select(col(idCol), lit(0).as("th")).limit(0),
+      "pending" -> docs.select(col(idCol),
+        lit(null).cast("string").as(textCol)).limit(0))
+
   /** Build and persist the index from scratch (the seed save the
-    * maintenance stream grows from). The empty `deleted` part is the
-    * live-docs exclusion list [[delete]] appends to; the empty
-    * `pending` part — KEYED on the id, latest batch wins — is where
-    * [[stageUpdates]] parks CDC-updated texts until the next fold
-    * merges them in. */
+    * maintenance stream grows from), with `mb` = 0 and an empty
+    * deletion ledger. */
   def save(path: String, docs: DataFrame, idCol: String,
       textCol: String): Unit =
     AnnIndex.save(path,
-      clusteredParts(deltaParts(docs, idCol, textCol), idCol) +
-        ("deleted" -> docs.select(col(idCol)).limit(0)) +
-        ("pending" -> docs.select(col(idCol), col(textCol)).limit(0)),
+      clusteredParts(stamped(deltaParts(docs, idCol, textCol), 0),
+        idCol) ++ emptyParts(docs, idCol, textCol),
       Map("kind" -> Kind, "id_col" -> idCol, "text_col" -> textCol),
       keys = Map("pending" -> Seq(idCol)))
 
   /** Delete documents — the Lucene live-docs semantics: the ids land
-    * on an exclusion list ([[search]] anti-joins matched postings
-    * against it), while their contribution to df and N stays in the
-    * statistics until [[compact]] physically merges them out. The
-    * write is |ids|-sized; nothing scans the index. A deleted id
-    * cannot be re-inserted until a compact frees it ([[append]] treats
-    * it as still stored — re-using external ids across a delete
-    * without compacting is the one unsupported order, as in Lucene,
-    * where internal doc numbers make it a non-question). */
+    * on the `deleted (idCol, th)` ledger with `th` = the current
+    * `postings` batch count, so every stored row of theirs (`mb < th`)
+    * stops scoring at once, while their contribution to df and N stays
+    * in the statistics until [[compact]] physically merges them out.
+    * The write is |ids|-sized; nothing scans the index. A deleted id
+    * cannot be re-inserted by a plain [[append]] until a compact frees
+    * it ([[append]] treats it as still stored); [[applyCdc]] re-inserts
+    * ids deleted in the same batch — the CDC update. */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit = {
     val store = AnnIndex.open(spark, path)
     requireStore("delete", store)
-    val dels = ids.select(col(idCol)).distinct().localCheckpoint(true)
-    // a delete must also retract any PENDING text for the id — a
-    // keyed tombstone (null text) in the same append, so a staged
-    // update that is later deleted can never resurrect at the fold;
-    // ids with no pending entry resolve to a lone tombstone and drop
-    AnnIndex.appendTo(store, Map("deleted" -> dels,
-      "pending" -> dels.select(col(idCol),
-        lit(null).cast("string").as(store.params("text_col")))))
+    AnnIndex.appendTo(store, Map("deleted" -> ledgerRows(store, ids, idCol)))
     ()
   }
 
-  /** Stage CDC UPDATES (id → replacement text) on the keyed `pending`
-    * part — the amortized alternative to forcing a full Lucene merge
-    * per colliding micro-batch: the caller has already [[delete]]d the
-    * ids (old version dead immediately), the replacement text lands
-    * here at |batch| write cost, [[search]] serves it right away (its
-    * query-term postings and df/N contribution are computed from the
-    * broadcast-sized pending relation at query time — exactly the
-    * statistics an [[append]] would have added, while the DELETED old
-    * version's stats stay stale until the fold, the same Lucene
-    * staleness deletes already carry), and the next scheduled
-    * [[compact]] merges pending into the index proper. Within a batch
-    * the same id must carry ONE text (exact replays collapse;
-    * conflicts FAIL LOUDLY — resolve upstream with a CDC sequence
-    * column, see the maintenance stream's `seqCol`). */
+  private def ledgerRows(store: AnnIndex.Store, ids: DataFrame,
+      idCol: String): DataFrame =
+    ids.select(col(idCol), lit(store.partBatches("postings")).as("th"))
+
   /** Bounded driver-side id collection WITH the conflict guard folded
     * in: `rel` is already dropDuplicates(id, text)-collapsed, so a
     * repeated id in the collected list IS a conflict (two different
@@ -236,123 +234,46 @@ object TextIndex {
     }
   }
 
-  def stageUpdates(spark: SparkSession, path: String, docs: DataFrame,
-      idCol: String, textCol: String): Unit = {
-    val store = AnnIndex.open(spark, path)
-    requireStore("stageUpdates", store)
-    val staged = docs.select(col(idCol), col(textCol))
-      .dropDuplicates(idCol, textCol).localCheckpoint(true)
-    val ids = idsWithConflictGuard(staged, idCol, cs =>
-      s"TextIndex.stageUpdates: conflicting texts for id(s) " +
-        s"${cs.mkString(", ")} within one batch — an " +
-        "arbitrary winner would be partition-order dependent; " +
-        "resolve upstream (the maintenance stream's seqCol)")
-    if (ids.forall(_.nonEmpty))
-      AnnIndex.appendTo(store, Map("pending" -> staged))
-  }
-
-  /** ONE CDC micro-batch — deletes, staged updates and plain appends —
-    * applied as ONE index load and ONE multi-part [[AnnIndex.append]]
-    * (one manifest version), where the maintenance loop previously
-    * chained [[delete]] → [[stageUpdates]] → [[append]]: three full
-    * load/validate/append cycles per colliding micro-batch, each with
-    * its own part writes and manifest rewrite (measured at sf0.1:
-    * 2.3 s + 3.2 s + 1.7 s per batch → one ~2.5 s call; guide §1.2 —
-    * fix the number of passes before tuning anything inside them).
-    *
-    * Semantics are EXACTLY the sequential chain's (TextIndexSpec pins
-    * equality): `staged` ids must be a subset of `dels` (the CDC
-    * update order — delete + re-arrival in one batch; the maintenance
-    * stream guarantees it). The fused pending delta resolves
-    * identically to the two sequential appends: a deleted id WITH a
-    * replacement gets the staged row (which would have won the keyed
-    * window anyway), a deleted id WITHOUT one gets the tombstone; the
-    * dedup/conflict guards of stageUpdates and append both run
-    * unchanged. `appends` rows whose ids are already stored are
-    * dropped exactly as [[append]] drops them (the `docs` part deletes
-    * never rewrite is the same part the sequential chain checked). */
+  /** ONE CDC micro-batch — deletes and arrivals — applied as ONE index
+    * load and ONE multi-part [[AnnIndex.append]] (one manifest
+    * version): the `dels` ids land on the ledger at `th` = the current
+    * `postings` batch count, and the `inserts` are appended exactly as
+    * [[append]] appends them, stamped `mb` = that same count — except
+    * that ids deleted in THIS batch do not count as stored, so a
+    * delete + re-arrival of one id (the CDC update) retires the old
+    * version (`mb < th`) and indexes the new one (`mb = th`) in the
+    * same append. The update's df_delta and stats row are those of a
+    * fresh doc; the retired version's df/N stay counted until the
+    * fold, as a delete's do (Lucene) — including every superseded
+    * version of an id updated more than once between folds. `dels` is
+    * read twice (the ledger write and the prune); pin it if it is
+    * expensive to recompute. */
   def applyCdc(spark: SparkSession, path: String, dels: DataFrame,
-      staged: DataFrame, appends: DataFrame, idCol: String,
-      textCol: String): Long =
-    applyCdc(AnnIndex.open(spark, path), dels, staged, appends,
-      idCol, textCol)._1
+      inserts: DataFrame, idCol: String, textCol: String): Long =
+    applyCdc(AnnIndex.open(spark, path), dels, inserts, idCol,
+      textCol)._1
 
   /** [[applyCdc]] against an OPEN [[AnnIndex.Store]] handle — the
     * maintenance loop's per-micro-batch entry point: the caller's
     * handle already carries the resolved generation, manifest, parts
     * and params, and the returned successor handle serves the
     * follow-up compaction probe, so ONE manifest read backs the whole
-    * micro-batch (previously: partKeys + load + append + maxBatches
-    * each re-read it). */
+    * micro-batch. */
   def applyCdc(store: AnnIndex.Store, dels: DataFrame,
-      staged: DataFrame, appends: DataFrame, idCol: String,
-      textCol: String): (Long, AnnIndex.Store) = {
-    requireStore("applyCdc", store)
-    val delIds = dels.select(col(idCol)).distinct().localCheckpoint(true)
-    // stageUpdates' guard, unchanged: one text per id or fail loudly
-    val stg = staged.select(col(idCol), col(textCol))
-      .dropDuplicates(idCol, textCol).localCheckpoint(true)
-    idsWithConflictGuard(stg, idCol, cs =>
-      s"TextIndex.applyCdc: conflicting staged texts for id(s) " +
-        s"${cs.mkString(", ")} within one batch — resolve " +
-        "upstream (the maintenance stream's seqCol)")
-    // the documented precondition `staged ⊆ dels` (the CDC update
-    // order: delete + re-arrival in one batch), ENFORCED: a direct
-    // caller violating it would leave the id's stored postings live
-    // while the pending part also serves the replacement — silently
-    // double-counting the doc in scores/df until the next fold
-    val strays = stg.select(col(idCol))
-      .join(delIds, Seq(idCol), "left_anti")
-      .limit(5).collect().map(_.get(0))
-    require(strays.isEmpty,
-      s"TextIndex.applyCdc: staged id(s) ${strays.mkString(", ")} " +
-        "not in the delete set — a staged update must be the " +
-        "re-arrival half of a delete (stage without delete would " +
-        "double-count the doc until the next fold)")
-    // append's guards, unchanged: dedup, conflicts, stored-id prune
-    val arriving = appends.select(col(idCol), col(textCol))
-      .dropDuplicates(idCol, textCol).localCheckpoint(true)
-    val ids = idsWithConflictGuard(arriving, idCol, cs =>
-      s"TextIndex.applyCdc: conflicting texts for id(s) " +
-        s"${cs.mkString(", ")} within one batch — resolve " +
-        "upstream (the maintenance stream's seqCol)")
-    val fresh =
-      if (ids.exists(_.isEmpty)) arriving
-      else {
-        val stored = ids match {
-          case Some(ks) => store.parts("docs").select(col(idCol))
-            .filter(col(idCol).isin(ks: _*))
-          case None => store.parts("docs").select(col(idCol))
-        }
-        arriving.join(stored, Seq(idCol), "left_anti")
-          .localCheckpoint(true)
-      }
-    val n = if (ids.exists(_.isEmpty)) 0L else fresh.count()
-    // fused pending delta: staged rows win their ids; deleted ids with
-    // no replacement carry the keyed tombstone (retracting any
-    // earlier-batch pending text exactly like delete's tombstone append)
-    val pendDelta = stg.unionByName(
-      delIds.join(stg.select(col(idCol)), Seq(idCol), "left_anti")
-        .select(col(idCol), lit(null).cast("string").as(textCol)))
-    val next = AnnIndex.appendTo(store,
-      Map("deleted" -> delIds, "pending" -> pendDelta) ++
-        (if (n > 0) deltaWriteParts(
-          deltaParts(fresh, idCol, textCol), idCol, n)
-        else Map.empty[String, DataFrame]))
-    (n, next)
-  }
+      inserts: DataFrame, idCol: String, textCol: String)
+      : (Long, AnnIndex.Store) =
+    land("applyCdc", store, Some(dels), inserts, idCol, textCol)
 
   /** Fold the index to single-batch form AND physically apply the
-    * deletion list and the staged pending updates — the Lucene merge:
-    * surviving postings are an anti-join (no stored text is ever
-    * re-tokenized), PENDING texts — the only rows not yet indexed —
-    * are tokenized once here and unioned in as fresh docs, df is
-    * re-counted from the merged postings (one vocabulary-bounded agg
-    * over index rows), stats re-derive from the merged doc list, and
-    * the deleted/pending parts empty — freeing those ids for
-    * re-insertion. After this, search's df/N are exact again
-    * (equality with save(survivors ∪ updates) is spec-pinned). `dst`
-    * must differ from `src`, as in [[AnnIndex.compact]]. */
+    * deletion ledger — the Lucene merge: the live `postings` and
+    * `docs` rows ([[AnnIndex.liveRows]]) are kept with `mb` reset to
+    * 0 (no stored text is ever re-tokenized), df is re-counted from
+    * the kept postings (one vocabulary-bounded agg over index rows),
+    * stats re-derive from the kept doc list, and the ledger empties —
+    * freeing the deleted ids for re-insertion and making search's
+    * df/N exact again (equality with save(final corpus) is
+    * spec-pinned). `dst` must differ from `src`, as in
+    * [[AnnIndex.compact]]. */
   def compact(spark: SparkSession, srcPath: String, dstPath: String)
       : Unit = {
     require(srcPath != dstPath,
@@ -360,60 +281,27 @@ object TextIndex {
     val (parts, params) = AnnIndex.load(spark, srcPath)
     requireStore("compact", srcPath, params, parts.keys)
     val idCol = params("id_col")
-    val textCol = params("text_col")
-    // no-op fast paths: the deleted and pending parts hold only the
-    // SINCE-LAST-COMPACT burst, and the scheduled-fold steady state
-    // (q257's compactEvery loop) folds with BOTH empty — two bounded
-    // emptiness probes then skip the anti-joins, the empty-relation
-    // tokenize chain and the four blocking localCheckpoints that
-    // existed only to pin those merge legs (the fold degenerates to
-    // resolve-batches + re-save, which is all it ever did in that
-    // case; results are identical — an anti-join against an empty set
-    // and a union with an empty delta are both identities)
-    val dead = if (parts("deleted").isEmpty) None
-      else Some(parts("deleted").select(col(idCol)).distinct()
-        .localCheckpoint(true))
-    val pend = if (parts("pending").isEmpty) None
-      else Some(parts("pending").select(col(idCol), col(textCol))
-        .localCheckpoint(true))
-    // pending ids are on the dead list by construction (an update is
-    // delete + stage), so survivors never overlap the pending docs
-    val pendDelta = pend.map(p => deltaParts(p, idCol, textCol))
-    def merged(part: String, survivors: DataFrame): DataFrame =
-      pendDelta.fold(survivors)(d => survivors.unionByName(d(part)))
-    def survivorsOf(df: DataFrame): DataFrame =
-      dead.fold(df)(d => df.join(d, Seq(idCol), "left_anti"))
-    // pin only when there are merge legs to share; a plain resolved
-    // batch union is cheaper to scan twice than to materialize
-    def pinned(df: DataFrame): DataFrame =
-      if (dead.isEmpty && pendDelta.isEmpty) df
-      else df.localCheckpoint(true)
-    val docs = pinned(merged("docs", survivorsOf(parts("docs"))))
-    val postings = pinned(
-      merged("postings", survivorsOf(parts("postings"))))
-    val termdf = postings.groupBy(col("term"))
-      .agg(count(lit(1)).as("df_delta"))
-    val stats = docs.agg(count(lit(1)).as("n_docs"),
-      coalesce(sum(col("dl")), lit(0L)).as("len_sum"))
+    val live = Seq("postings", "docs").map(p => p ->
+      AnnIndex.liveRows(parts(p), parts("deleted"), idCol)
+        .withColumn("mb", lit(0))).toMap
     AnnIndex.save(dstPath,
-      clusteredParts(
-        Map("postings" -> postings, "docs" -> docs,
-          "termdf" -> termdf), idCol) +
-        ("stats" -> stats) +
-        ("deleted" -> docs.select(col(idCol)).limit(0)) +
-        ("pending" -> docs.select(col(idCol),
-          lit(null).cast("string").as(textCol)).limit(0)),
+      clusteredParts(live + ("termdf" -> live("postings")
+        .groupBy(col("term")).agg(count(lit(1)).as("df_delta"))),
+        idCol) +
+        ("stats" -> live("docs").agg(count(lit(1)).as("n_docs"),
+          coalesce(sum(col("dl")), lit(0L)).as("len_sum"))) ++
+        emptyParts(parts("pending"), idCol, params("text_col")),
       params, keys = Map("pending" -> Seq(idCol)))
   }
 
   /** Append a batch of documents as one more batch directory per part
     * (manifest bumped last — a torn append is invisible). Re-arrivals
-    * of stored ids are dropped HERE so df_delta stays exact no matter
-    * the caller. Exact replays within a batch (same id, same text)
-    * collapse; two DIFFERENT texts under one id are a data bug and
-    * FAIL LOUDLY — a silent arbitrary winner would make the index
-    * partition-order dependent. Returns the number of genuinely-new
-    * docs appended.
+    * of stored ids — deleted ones included, until a fold frees them —
+    * are dropped HERE so df_delta stays exact no matter the caller.
+    * Exact replays within a batch (same id, same text) collapse; two
+    * DIFFERENT texts under one id are a data bug and FAIL LOUDLY — a
+    * silent arbitrary winner would make the index partition-order
+    * dependent. Returns the number of genuinely-new docs appended.
     *
     * Scale shape: the stored-id overlap check collects UP TO
     * [[MaxInlineIds]] batch ids to the driver (bounded by the
@@ -439,42 +327,53 @@ object TextIndex {
     * [[applyCdc]]'s handle overload for why): one manifest read per
     * micro-batch, successor handle returned for the compaction probe. */
   def append(store: AnnIndex.Store, docs: DataFrame,
-      idCol: String, textCol: String): (Long, AnnIndex.Store) = {
-    requireStore("append", store)
+      idCol: String, textCol: String): (Long, AnnIndex.Store) =
+    land("append", store, None, docs, idCol, textCol)
+
+  /** The one write path behind [[append]] and [[applyCdc]]: dedup and
+    * conflict guard, stored-id prune (ids in `dels` do not count as
+    * stored), then ONE [[AnnIndex.appendTo]] of the ledger rows and the
+    * `mb`-stamped deltas. Nothing to write returns the same handle. */
+  private def land(op: String, store: AnnIndex.Store,
+      dels: Option[DataFrame], docs: DataFrame, idCol: String,
+      textCol: String): (Long, AnnIndex.Store) = {
+    requireStore(op, store)
     val arriving = docs.select(col(idCol), col(textCol))
       .dropDuplicates(idCol, textCol)
       .localCheckpoint(true)
     val ids = idsWithConflictGuard(arriving, idCol, cs =>
-      s"TextIndex.append: conflicting texts for id(s) " +
+      s"TextIndex.$op: conflicting texts for id(s) " +
         s"${cs.mkString(", ")} within one batch — an " +
         "arbitrary winner would be partition-order dependent; " +
-        "resolve upstream (or delete + re-insert as a CDC update)")
-    if (ids.exists(_.isEmpty)) return (0L, store)
-    val stored = ids match {
-      case Some(ks) => store.parts("docs").select(col(idCol))
-        .filter(col(idCol).isin(ks: _*))
-      case None => store.parts("docs").select(col(idCol))
-    }
-    val fresh = arriving.join(stored, Seq(idCol), "left_anti")
-      .localCheckpoint(true)
-    val n = fresh.count()
-    if (n > 0)
-      (n, AnnIndex.appendTo(store,
-        deltaWriteParts(deltaParts(fresh, idCol, textCol), idCol, n)))
-    else (n, store)
+        "resolve upstream (the maintenance stream's seqCol)")
+    val (n, delta) =
+      if (ids.exists(_.isEmpty)) (0L, Map.empty[String, DataFrame])
+      else {
+        val docIds = store.parts("docs").select(col(idCol))
+        val inBatch = ids.fold(docIds)(ks =>
+          docIds.filter(col(idCol).isin(ks: _*)))
+        val stored = dels.fold(inBatch)(d =>
+          inBatch.join(d.select(col(idCol)), Seq(idCol), "left_anti"))
+        val fresh = arriving.join(stored, Seq(idCol), "left_anti")
+          .localCheckpoint(true)
+        val n = fresh.count()
+        (n, if (n == 0) Map.empty[String, DataFrame]
+          else deltaWriteParts(stamped(deltaParts(fresh, idCol, textCol),
+            store.partBatches("postings")), idCol, n))
+      }
+    val writes = delta ++
+      dels.map(d => "deleted" -> ledgerRows(store, d, idCol))
+    (n, if (writes.isEmpty) store else AnnIndex.appendTo(store, writes))
   }
 
   /** BM25 top-`k` from the persisted index: (idCol, n_hit, score) by
     * (round-6 score desc, id asc) — the [[TextOps.bm25Search]]
-    * contract, answered from disk with term-pruned scans. PENDING
-    * updates (staged by [[stageUpdates]], not yet folded) are served
-    * live: the pending relation is updates-since-last-compact —
-    * broadcast-sized — so its query-term postings, df deltas and one
-    * stats row are computed here at query time and unioned in,
-    * which is EXACTLY the contribution an [[append]] of those texts
-    * would have persisted; the deleted OLD versions' stats stay
-    * stale until the fold (the Lucene semantics deletes already
-    * carry). */
+    * contract, answered from disk with term-pruned scans. Between
+    * folds the matched postings pass the deletion ledger
+    * ([[AnnIndex.liveRows]]): deleted and superseded versions never
+    * score, while their df/N stay counted until the fold (the Lucene
+    * semantics). Updates need no query-time work — they were indexed
+    * as ordinary deltas when they arrived. */
   def search(spark: SparkSession, path: String, query: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val qt = query.trim.toLowerCase.split("\\s+")
@@ -483,41 +382,19 @@ object TextIndex {
     val (parts, params) = AnnIndex.load(spark, path)
     requireStore("search", path, params, parts.keys)
     val idCol = params("id_col")
-    // the emptiness probe is one job over the updates-since-last-
-    // compact relation (broadcast-sized); when pending is empty —
-    // after every fold, the steady state — the plan has no pending
-    // leg at all (the PlanShapeSpec exchange ratchet)
-    // pin = false: the pending relation is broadcast-sized and this is
-    // the QUERY path — an eager checkpoint here would run blocking
-    // materialization jobs per search and pin executor storage blocks
-    // between folds (write paths keep the pin; they materialize
-    // every part anyway)
-    val pendDelta = if (parts("pending").isEmpty) None
-      else Some(deltaParts(parts("pending"), idCol, params("text_col"),
-        pin = false))
     // batches-sized and |terms|-sized rollups — broadcast into the
     // posting scan so the only wide stage is the per-doc score agg
-    val stats = pendDelta.fold(parts("stats"))(d =>
-        parts("stats").unionByName(d("stats")))
+    val stats = parts("stats")
       .agg(sum(col("n_docs")).cast("double").as("__n_docs"),
         (sum(col("len_sum")).cast("double") /
           sum(col("n_docs")).cast("double")).as("__avg_dl"))
-    val df = pendDelta.fold(parts("termdf"))(d =>
-        parts("termdf").unionByName(d("termdf")))
+    val df = parts("termdf")
       .filter(col("term").isin(qt: _*))
       .groupBy(col("term"))
       .agg(sum(col("df_delta")).as("df"))
-    // live-docs exclusion: deleted docs never score, but their df/N
-    // contribution persists until compact (the Lucene semantics); the
-    // list is deletions-since-last-compact — broadcast-sized. Pending
-    // ids are dead by construction (update = delete + stage), so only
-    // their query-time postings score, never their stored rows.
-    val dead = parts("deleted").select(idCol).distinct()
-    val matched = parts("postings")
-      .filter(col("term").isin(qt: _*))
-      .join(broadcast(dead), Seq(idCol), "left_anti")
-    pendDelta.fold(matched)(d =>
-        matched.unionByName(d("postings").filter(col("term").isin(qt: _*))))
+    // the ledger is deletions-since-compact — broadcast-sized
+    AnnIndex.liveRows(parts("postings").filter(col("term").isin(qt: _*)),
+        parts("deleted"), idCol)
       .join(broadcast(df), Seq("term"))
       .crossJoin(broadcast(stats))
       .select(col(idCol),

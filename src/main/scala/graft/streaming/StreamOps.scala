@@ -335,20 +335,19 @@ object StreamOps {
     * bench/ANN_LOAD_CURVE_SF1_r12.json), and the BM25 fold ALSO
     * applies the deletion list (the Lucene merge).
     *
-    * CDC mode (`opCol` non-empty): rows whose `opCol` = "delete" ride
-    * [[graft.ops.TextIndex.delete]] (live-docs semantics — dead
+    * CDC mode (`opCol` non-empty): rows whose `opCol` = "delete" land
+    * on the index's deletion ledger (live-docs semantics — dead
     * immediately, df/N stale until the fold); everything else —
-    * including NULL/unknown ops — appends. Deletes apply FIRST within
-    * a micro-batch; when the same id also ARRIVES in that batch (the
-    * standard CDC update order: delete + re-insert), the replacement
-    * text is STAGED on the index's keyed `pending` part
-    * ([[graft.ops.TextIndex.stageUpdates]]) at |batch| write cost:
-    * search serves it immediately (query-time postings over the
-    * broadcast-sized pending relation) and the next SCHEDULED fold
-    * merges it in — N colliding batches cost N small appends and ONE
-    * fold, not N Lucene merges. Every CDC micro-batch lands through
-    * [[graft.ops.TextIndex.applyCdc]], which refuses a store without
-    * the `pending` part before appending anything.
+    * including NULL/unknown ops — arrives. Every CDC micro-batch lands
+    * through [[graft.ops.TextIndex.applyCdc]] as ONE append: when an id
+    * is deleted AND arrives in the same batch (the standard CDC update
+    * order: delete + re-insert), the old version is retired on the
+    * ledger and the replacement is indexed as an ordinary delta at
+    * |batch| write cost, searchable at once with no query-time work;
+    * the next SCHEDULED fold drops the retired rows — N colliding
+    * batches cost N small appends and ONE fold, not N Lucene merges.
+    * `applyCdc` refuses a store without the full [[graft.ops.TextIndex]]
+    * layout before appending anything.
     *
     * `seqCol` (optional): a CDC sequence/offset column. A micro-batch
     * can legitimately carry SEVERAL versions of one id (delete X,
@@ -357,7 +356,7 @@ object StreamOps {
     * itself, so the winner is a pure function of the data, never of
     * partition order). Without it, conflicting same-id texts in one
     * batch FAIL LOUDLY (the [[graft.ops.TextIndex.append]] /
-    * `stageUpdates` guard) — and because a restart replays the same
+    * `applyCdc` guard) — and because a restart replays the same
     * batch, an upstream that can collide MUST either pass `seqCol` or
     * dedup before the sink. */
   def bm25MaintenanceStream(stream: DataFrame, idCol: String,
@@ -382,22 +381,20 @@ object StreamOps {
           if (opCol.isEmpty) None
           else Some(batch.toDF().filter(col(opCol) === "delete")
             .select(idCol).localCheckpoint(true)).filterNot(_.isEmpty)
-        // same-batch delete + re-arrival = a CDC UPDATE, staged on the
-        // keyed pending part; the whole micro-batch — deletes, staged
-        // updates, leftover appends — lands as ONE load + ONE
-        // multi-part append
+        // the whole micro-batch — deletes and every arrival — lands
+        // as ONE multi-part append; a same-batch delete + re-arrival
+        // is a CDC UPDATE (old version retired on the ledger, new one
+        // indexed as a delta)
         val store = dels match {
           case Some(d) => graft.ops.TextIndex.applyCdc(opened, d,
-              arrivals.join(d, Seq(idCol), "left_semi"),
-              arrivals.join(d, Seq(idCol), "left_anti"),
-              idCol, textCol)._2
+              arrivals, idCol, textCol)._2
           case None => graft.ops.TextIndex.append(opened, arrivals,
               idCol, textCol)._2
         }
-        // the BM25 fold also APPLIES the deletion list and merges the
-        // staged pending updates in (Lucene merge) — deleted ids free
-        // up and df/N return to exact; the successor handle's manifest
-        // answers the trigger probe with no fresh read
+        // the BM25 fold also APPLIES the deletion ledger (Lucene
+        // merge) — deleted ids free up and df/N return to exact; the
+        // successor handle's manifest answers the trigger probe with
+        // no fresh read
         if (compactEvery > 0 && store.maxBatches >= compactEvery)
           graft.ops.AnnIndex.compactToNextGen(sp, indexPath,
             graft.ops.TextIndex.compact)

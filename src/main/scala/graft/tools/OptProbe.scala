@@ -44,31 +44,16 @@ object OptProbe {
           time(s"rep$rep save(full corpus)") {
             graft.ops.TextIndex.save(idxPath, docs, "doc_id", "text")
           }
-          val sel = col("doc_id") % 7 === 2
-          time(s"rep$rep delete(batch1)") {
-            graft.ops.TextIndex.delete(spark, idxPath,
-              docs.filter(sel).select("doc_id"), "doc_id")
-          }
-          time(s"rep$rep stageUpdates(batch1)") {
-            graft.ops.TextIndex.stageUpdates(spark, idxPath,
-              docs.filter(sel).select(col("doc_id"),
-                concat(col("text"), lit(" updated beta")).as("text")),
-              "doc_id", "text")
-          }
-          time(s"rep$rep append(empty leftover)") {
-            graft.ops.TextIndex.append(spark, idxPath,
-              docs.filter(sel).limit(0), "doc_id", "text")
-          }
-          val sel2 = col("doc_id") % 7 === 3
-          time(s"rep$rep delete(batch2)") {
-            graft.ops.TextIndex.delete(spark, idxPath,
-              docs.filter(sel2).select("doc_id"), "doc_id")
-          }
-          time(s"rep$rep stageUpdates(batch2)") {
-            graft.ops.TextIndex.stageUpdates(spark, idxPath,
-              docs.filter(sel2).select(col("doc_id"),
-                concat(col("text"), lit(" updated gamma")).as("text")),
-              "doc_id", "text")
+          Seq(2 -> " updated beta", 3 -> " updated gamma").foreach {
+            case (r7, sfx) =>
+              val sel = col("doc_id") % 7 === r7
+              time(s"rep$rep applyCdc(r7=$r7)") {
+                graft.ops.TextIndex.applyCdc(spark, idxPath,
+                  docs.filter(sel).select("doc_id"),
+                  docs.filter(sel).select(col("doc_id"),
+                    concat(col("text"), lit(sfx)).as("text")),
+                  "doc_id", "text")
+              }
           }
           time(s"rep$rep fold(compactToNextGen)") {
             graft.ops.AnnIndex.compactToNextGen(spark, idxPath,

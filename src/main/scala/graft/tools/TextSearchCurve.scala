@@ -10,16 +10,16 @@ import org.apache.spark.sql.functions._
   * doesn't measure: a FIXED 16-query set (3 terms each, drawn
   * deterministically across the seed index's df spectrum) answered
   * through the full production read path (`TextIndex.search` →
-  * `AnnIndex.load` + term-pruned postings scan + live-docs anti-join
-  * + pending serve), measured
+  * `AnnIndex.load` + term-pruned postings scan + deletion-ledger
+  * join), measured
   *
   *  - BEFORE a fold, against the state a store is actually in
   *    mid-day: seed + `appends` incremental append batches, a 1%
-  *    delete on the live-docs list, and a set of STAGED pending
-  *    updates (so the query-time pending serve path is exercised,
-  *    not just the empty-pending fast shape);
+  *    delete on the ledger, and a batch of CDC updates through
+  *    `TextIndex.applyCdc` (so the ledger holds retired versions, not
+  *    just deleted ones);
   *  - AFTER `TextIndex.compact` folds it to single-batch form with
-  *    empty deleted/pending — the post-merge steady state;
+  *    an empty ledger — the post-merge steady state;
   *
   * each as min-of-3 walls, plus the exact MATCHED-POSTINGS row count
   * (Σ df over the 48 query terms — the rows that actually enter the
@@ -91,9 +91,10 @@ object TextSearchCurve {
         .drop("__rk")
       TextIndex.append(spark, idx, arrivals, "doc_id", "text")
     }
-    // live-docs delete (1% of seed) + STAGED updates (~0.2% of seed:
-    // delete the old version, stage the replacement) so the pre-fold
-    // search pays the full mid-day read path
+    // live-docs delete (1% of seed) + CDC updates (~0.2% of seed:
+    // the old version retired on the ledger, the replacement indexed
+    // in the same append) so the pre-fold search pays the full
+    // mid-day read path
     val delIds = seed.select("doc_id")
       .filter(pmod(col("doc_id"), lit(97L)) === 3)
     TextIndex.delete(spark, idx, delIds, "doc_id")
@@ -103,8 +104,8 @@ object TextSearchCurve {
         concat(lit("updated revision "), col("text")).as("text"))
       .localCheckpoint(true)
     val nUpd = updates.count()
-    TextIndex.delete(spark, idx, updates.select("doc_id"), "doc_id")
-    TextIndex.stageUpdates(spark, idx, updates, "doc_id", "text")
+    TextIndex.applyCdc(spark, idx, updates.select("doc_id"), updates,
+      "doc_id", "text")
 
     // fixed query set: 48 terms at deterministic ranks across the
     // SEED df spectrum (rank 8, 16, 24, ... by df desc, term asc) —
@@ -144,7 +145,7 @@ object TextSearchCurve {
         s""""total_postings":$t,""" +
         s""""matched_frac":${r3(m.toDouble / t)}}"""
     val json = s"""{"sf":"$sfDir","grow":$grow,"n_seed":$nSeed,""" +
-      s""""appends":$appends,"n_staged_updates":$nUpd,""" +
+      s""""appends":$appends,"n_updates":$nUpd,""" +
       s""""queries":${queries.length},"terms":${terms.length},""" +
       s""""fold_sec":${r3(foldSec)},""" +
       s""""pre_fold":${side(preW, preM, preT,

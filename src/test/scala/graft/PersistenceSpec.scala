@@ -392,6 +392,31 @@ class PersistenceSpec extends SparkSpec {
     assert(AnnIndex.maxBatches(spark, dir) == 3)
   }
 
+  test("AnnIndex.save refuses a root holding an APPENDED index: " +
+    "save → append → save throws naming the root and the committed " +
+    "version, and the old store still loads unchanged") {
+    import graft.ops.AnnIndex
+    val dir = Files.createTempDirectory("graft-ann-resave").toString +
+      "/idx"
+    AnnIndex.save(dir, Map("rows" -> Seq((1L, "old")).toDF("k", "v")),
+      Map("kind" -> "t"))
+    // a plain re-save over a never-appended root stays allowed
+    AnnIndex.save(dir, Map("rows" -> Seq((1L, "old")).toDF("k", "v")),
+      Map("kind" -> "t"))
+    AnnIndex.append(dir,
+      Map("rows" -> Seq((2L, "old-appended")).toDF("k", "v")))
+    val err = intercept[IllegalArgumentException] {
+      AnnIndex.save(dir, Map("rows" -> Seq((9L, "new")).toDF("k", "v")),
+        Map("kind" -> "t2"))
+    }
+    assert(err.getMessage.contains(dir) &&
+      err.getMessage.contains("version 1"), err.getMessage)
+    val (parts, params) = AnnIndex.load(spark, dir)
+    assert(params("kind") == "t")
+    assert(parts("rows").orderBy("k").collect().map(_.toSeq).toSeq ==
+      Seq(Seq(1L, "old"), Seq(2L, "old-appended")))
+  }
+
   test("AnnIndex: overlapping-id arrivals are dropped (insert stays " +
     "idempotent); un-keyed parts append as plain row unions; a " +
     "corrupted manifest part name refuses to load") {

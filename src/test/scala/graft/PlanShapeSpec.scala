@@ -518,6 +518,50 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("TextIndex.search between folds: after an un-folded applyCdc " +
+    "with updates and deletes the plan is the post-fold plan plus one " +
+    "ledger join — ≤ 4 exchanges, no tokenize Generate, the term IN " +
+    "pushed into every postings and termdf scan") {
+    withStaticPlans {
+      import org.apache.spark.sql.functions.{col, concat, lit}
+      val tmp = java.nio.file.Files
+        .createTempDirectory("graft-textindex-cdc-plan").toString + "/idx"
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      graft.ops.TextIndex.save(tmp, docs, "doc_id", "text")
+      val upd = docs.filter(col("doc_id") % 7 === 2)
+      graft.ops.TextIndex.applyCdc(spark, tmp,
+        docs.filter(col("doc_id") % 7 <= 3).select("doc_id"),
+        upd.select(col("doc_id"),
+          concat(col("text"), lit(" updated window")).as("text")),
+        "doc_id", "text")
+      val df = graft.ops.TextIndex.search(spark, tmp,
+        "merge window sort", 10)
+      val plan = df.queryExecution.executedPlan
+      val scans = plan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+      def partScans(part: String) = scans.filter(_.relation.location
+        .rootPaths.exists(_.toString.contains(s"/$part/")))
+      assert(plan.collect {
+        case g: org.apache.spark.sql.execution.GenerateExec => g
+      }.isEmpty, "search must not tokenize at query time:\n" + plan)
+      assert(shuffles(df) <= 4,
+        "an un-folded CDC store grew the search plan past the " +
+          "post-fold exchanges plus the ledger's:\n" + plan.toString)
+      assert(partScans("pending").isEmpty,
+        "search must not read the pending part:\n" + plan.toString)
+      // the CDC append added a second batch to both parts
+      for (part <- Seq("postings", "termdf")) {
+        val ss = partScans(part)
+        assert(ss.length == 2 && ss.forall(_.metadata.get("PushedFilters")
+            .exists(_.contains("In(term"))),
+          s"the term IN (...) filter must reach both $part batch scans " +
+            "(PushedFilters):\n" + plan.toString)
+      }
+    }
+  }
+
   test("ANN maintenance probes: the batch's cell predicate is PUSHED " +
     "into the members part's parquet scan, and a key-column predicate " +
     "commutes below the keyed-resolve window into the knn scan — " +

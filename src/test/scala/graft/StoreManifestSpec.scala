@@ -131,8 +131,8 @@ class StoreManifestSpec extends SparkSpec with BeforeAndAfterAll {
       (3L, "bubble sort")).toDF("doc_id", "text"), "doc_id", "text")
     assertRecordedSchemas(text)
     TextIndex.applyCdc(spark, text, Seq(2L, 3L).toDF("doc_id"),
-      Seq((2L, "window merge")).toDF("doc_id", "text"),
-      Seq((4L, "heap sort")).toDF("doc_id", "text"), "doc_id", "text")
+      Seq((2L, "window merge"), (4L, "heap sort")).toDF("doc_id", "text"),
+      "doc_id", "text")
     assert(AnnIndex.maxBatches(spark, text) >= 2)
     assertRecordedSchemas(text)
     AnnIndex.compactToNextGen(spark, text, TextIndex.compact)

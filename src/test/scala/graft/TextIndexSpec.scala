@@ -180,17 +180,18 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("bm25MaintenanceStream CDC UPDATE: delete + re-arrival of one " +
-    "id in the SAME micro-batch replaces its text (staged pending, " +
-    "merged by the scheduled fold); a NULL op appends as documented") {
+    "id in the SAME micro-batch replaces its text (old version retired " +
+    "on the ledger, new one appended as a delta, retired rows dropped " +
+    "by the scheduled fold); a NULL op appends as documented") {
     implicit val sqlCtx = spark.sqlContext
     val path = dir("cdc-upd")
     TextIndex.save(path, corpus.take(5).toDF("doc_id", "text"),
       "doc_id", "text")
     val input = MemoryStream[(Long, String, String)]
     val df = input.toDF().toDF("doc_id", "text", "op")
-    // compactEvery=2: the delete append takes a part to 2 batches, so
-    // the SCHEDULED fold runs right after the batch and merges the
-    // staged update in — post-fold answers are exact
+    // compactEvery=2: the CDC append takes the parts to 2 batches, so
+    // the SCHEDULED fold runs right after the batch and drops the
+    // retired version — post-fold answers are exact
     val q = StreamOps.bm25MaintenanceStream(df, "doc_id", "text", path,
       compactEvery = 2, opCol = "op").start()
     try {
@@ -215,65 +216,105 @@ class TextIndexSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("applyCdc (one load + one multi-part append) ≡ the sequential " +
-    "delete → stageUpdates → append chain it fused: same search " +
-    "answers before AND after a fold, deletes-without-replacement " +
-    "included, conflicting staged texts still fail loudly") {
-    val docs = corpus.toDF("doc_id", "text")
-    val fusedPath = dir("cdc-fused")
-    val seqPath = dir("cdc-seq")
-    TextIndex.save(fusedPath, docs, "doc_id", "text")
-    TextIndex.save(seqPath, docs, "doc_id", "text")
+  /** `TextOps.bm25Search` over `statsCorpus` (every version df/N
+    * still counts) with the `dead` ids' rows dropped from the answer:
+    * the pre-fold contract of a store whose retired versions were
+    * relabeled to the `dead` ids. Per-doc scores are independent, so
+    * dropping rows leaves the others' order intact. */
+  private def staleRef(statsCorpus: Seq[(Long, String)], dead: Set[Long],
+      q: String, k: Int) =
+    asRows(TextOps.bm25Search(statsCorpus.toDF("doc_id", "text"),
+        "doc_id", "text", q, k = statsCorpus.size))
+      .filterNot(r => dead(r.head.asInstanceOf[Long])).take(k)
+
+  test("applyCdc (one load + one multi-part append): updates, " +
+    "deletes-without-replacement and fresh arrivals answer like " +
+    "bm25Search with stale df/N before the fold and exactly after " +
+    "it; re-arrivals of stored ids drop, conflicting texts fail") {
+    val path = dir("cdc-fused")
+    TextIndex.save(path, corpus.toDF("doc_id", "text"), "doc_id", "text")
     // one CDC batch: update ids 2 and 5, delete id 6 outright (no
-    // replacement), append fresh id 8
-    val dels = Seq(2L, 5L, 6L).toDF("doc_id")
-    val staged = Seq((2L, "rewritten merge article"),
-      (5L, "rewritten window survey")).toDF("doc_id", "text")
-    val appends = Seq((8L, "a brand new sorting paper"))
-      .toDF("doc_id", "text")
-    // sequential chain (the pre-r14 loop body)
-    TextIndex.delete(spark, seqPath, dels, "doc_id")
-    TextIndex.stageUpdates(spark, seqPath, staged, "doc_id", "text")
-    TextIndex.append(spark, seqPath, appends, "doc_id", "text")
-    // fused
-    val n = TextIndex.applyCdc(spark, fusedPath, dels, staged, appends,
+    // replacement), append fresh id 8; id 1 re-arrives undeleted
+    // with a changed text and must be dropped like any re-arrival
+    val inserts = Seq((2L, "rewritten merge article"),
+      (5L, "rewritten window survey"), (8L, "a brand new sorting paper"),
+      (1L, "changed text must be ignored"))
+    val n = TextIndex.applyCdc(spark, path,
+      Seq(2L, 5L, 6L).toDF("doc_id"), inserts.toDF("doc_id", "text"),
       "doc_id", "text")
-    assert(n == 1L, s"one genuinely-new doc appended, got $n")
-    for (q <- Seq("merge window sort", "rewritten", "fox", "sorting")) {
-      assert(asRows(TextIndex.search(spark, fusedPath, q, k = 8)) ==
-        asRows(TextIndex.search(spark, seqPath, q, k = 8)),
-        s"pre-fold '$q' must match the sequential chain")
+    assert(n == 3L, s"three docs indexed (two updates + one new), got $n")
+    // retired versions keep their df/N until the fold: relabel them
+    val retired = corpus.collect {
+      case (id, t) if Set(2L, 5L, 6L)(id) => (id + 1000L, t)
     }
-    AnnIndex.compactToNextGen(spark, fusedPath, TextIndex.compact)
-    AnnIndex.compactToNextGen(spark, seqPath, TextIndex.compact)
-    for (q <- Seq("merge window sort", "rewritten", "fox", "sorting")) {
-      assert(asRows(TextIndex.search(spark, fusedPath, q, k = 8)) ==
-        asRows(TextIndex.search(spark, seqPath, q, k = 8)),
-        s"post-fold '$q' must match the sequential chain")
+    val stats = corpus.filterNot(d => Set(2L, 5L, 6L)(d._1)) ++ retired ++
+      inserts.take(3)
+    val queries = Seq("merge window sort", "rewritten", "fox", "sorting")
+    for (q <- queries) {
+      assert(asRows(TextIndex.search(spark, path, q, k = 8)) ==
+        staleRef(stats, retired.map(_._1).toSet, q, 8),
+        s"pre-fold '$q': live versions scored with stale df/N")
     }
-    // the stageUpdates conflict guard still fires through applyCdc
+    // a plain append cannot bring back an id deleted in an earlier
+    // batch until the fold frees it
+    assert(TextIndex.append(spark, path,
+      Seq((6L, "resurrected")).toDF("doc_id", "text"),
+      "doc_id", "text") == 0)
+    AnnIndex.compactToNextGen(spark, path, TextIndex.compact)
+    val fin = (corpus.filterNot(d => Set(2L, 5L, 6L)(d._1)) ++
+      inserts.take(3)).toDF("doc_id", "text")
+    for (q <- queries) {
+      assert(asRows(TextIndex.search(spark, path, q, k = 8)) ==
+        asRows(TextOps.bm25Search(fin, "doc_id", "text", q, k = 8)),
+        s"post-fold '$q' must equal scoring the final corpus")
+    }
+    // the in-batch conflict guard fires through applyCdc
     val err = intercept[IllegalArgumentException] {
-      TextIndex.applyCdc(spark, fusedPath, Seq(1L).toDF("doc_id"),
+      TextIndex.applyCdc(spark, path, Seq(1L).toDF("doc_id"),
         Seq((1L, "version a"), (1L, "version b")).toDF("doc_id", "text"),
-        appends.limit(0), "doc_id", "text")
+        "doc_id", "text")
     }
-    assert(err.getMessage.contains("conflicting staged texts"))
-    // the staged ⊆ dels precondition is ENFORCED, not just documented:
-    // a stray staged id (stage without delete) would double-count the
-    // doc in scores/df until the next fold — it must fail loudly
-    val stray = intercept[IllegalArgumentException] {
-      TextIndex.applyCdc(spark, fusedPath, Seq(1L).toDF("doc_id"),
-        Seq((1L, "fine"), (3L, "stray staged text"))
-          .toDF("doc_id", "text"),
-        appends.limit(0), "doc_id", "text")
+    assert(err.getMessage.contains("conflicting texts"))
+  }
+
+  test("an id updated TWICE between folds: only the newest version " +
+    "scores, while the superseded versions' df/N stay counted until " +
+    "the fold (Lucene semantics); the fold makes df/N exact") {
+    val path = dir("cdc-twice")
+    val base = corpus.take(5)
+    TextIndex.save(path, base.toDF("doc_id", "text"), "doc_id", "text")
+    val v1 = "first rewrite about window merges"
+    val v2 = "second rewrite about sort"
+    for (t <- Seq(v1, v2))
+      TextIndex.applyCdc(spark, path, Seq(3L).toDF("doc_id"),
+        Seq((3L, t)).toDF("doc_id", "text"), "doc_id", "text")
+    def nDocs = AnnIndex.load(spark, path)._1("stats")
+      .agg(sum("n_docs")).head().getLong(0)
+    // four non-empty seed docs + both rewrites: every version counts
+    assert(nDocs == 6L, s"N before the fold: $nDocs")
+    val stats = base.map { case (id, t) =>
+      if (id == 3L) (1003L, t) else (id, t) } ++
+      Seq((2003L, v1), (3L, v2))
+    for (q <- Seq("merge window sort", "rewrite", "merges", "fox")) {
+      assert(asRows(TextIndex.search(spark, path, q, k = 7)) ==
+        staleRef(stats, Set(1003L, 2003L), q, 7),
+        s"pre-fold '$q': newest version only, stale df/N")
     }
-    assert(stray.getMessage.contains("not in the delete set"))
+    AnnIndex.compactToNextGen(spark, path, TextIndex.compact)
+    assert(nDocs == 4L, s"N after the fold: $nDocs")
+    val fin = base.map { case (id, t) =>
+      if (id == 3L) (id, v2) else (id, t) }.toDF("doc_id", "text")
+    for (q <- Seq("merge window sort", "rewrite", "merges", "fox")) {
+      assert(asRows(TextIndex.search(spark, path, q, k = 7)) ==
+        asRows(TextOps.bm25Search(fin, "doc_id", "text", q, k = 7)),
+        s"post-fold '$q' must equal scoring the final corpus")
+    }
   }
 
   test("bm25MaintenanceStream CDC UPDATE BURST: N colliding batches " +
-    "stage N pending appends and ZERO folds; search serves each " +
-    "staged text immediately (latest wins); ONE fold then makes the " +
-    "index exactly save(final corpus)") {
+    "make N delta appends and ZERO folds; search serves each new " +
+    "text immediately (latest wins, one live docs row); ONE fold then " +
+    "makes the index exactly save(final corpus)") {
     implicit val sqlCtx = spark.sqlContext
     val path = dir("cdc-burst")
     TextIndex.save(path, corpus.take(5).toDF("doc_id", "text"),
@@ -292,17 +333,24 @@ class TextIndexSpec extends SparkSpec {
         input.addData(Seq((3L, null.asInstanceOf[String], "delete"),
           (3L, text, "insert")))
         q.processAllAvailable()
-        // no generation fold happened — the update was STAGED
+        // no generation fold happened — the update was appended
         assert(AnnIndex.currentGen(spark, path) == 0,
-          "a colliding batch must stage, not force a Lucene merge")
-        // ...and the staged text is searchable right away, newest wins
+          "a colliding batch must append, not force a Lucene merge")
+        // ...and the new text is searchable right away, newest wins
         val hit = asRows(TextIndex.search(spark, path,
           text.split(" ").last, k = 7)).map(_.head.asInstanceOf[Long])
-        assert(hit.contains(3L), s"staged '$text' must be live")
+        assert(hit.contains(3L), s"updated '$text' must be live")
       }
-      // pending resolved keyed: exactly one live row, the LAST version
-      val pend = AnnIndex.load(spark, path)._1("pending").collect()
-      assert(pend.length == 1 && pend.head.getString(1) == versions.last)
+      // under the ledger exactly one docs row of id 3 is live: the
+      // LAST version's (its length, stamped with the last batch)
+      val (parts, _) = AnnIndex.load(spark, path)
+      val live = AnnIndex.liveRows(parts("docs"), parts("deleted"),
+        "doc_id").filter(col("doc_id") === 3L).collect()
+      assert(live.length == 1, s"live docs rows of id 3: ${live.toSeq}")
+      assert(live.head.getAs[Long]("dl") ==
+        versions.last.split(" ").length.toLong)
+      assert(live.head.getAs[Int]("mb") == versions.length)
+      assert(parts("pending").isEmpty, "nothing appends to pending")
       // ONE fold merges the burst; the index then equals save(final)
       AnnIndex.compactToNextGen(spark, path, TextIndex.compact)
       val want = dir("cdc-burst-want")
