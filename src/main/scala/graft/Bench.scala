@@ -3,26 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // measured-safe parquet IN-pushdown bound (see Hnsw.sortedByKey):
-      // maintenance probes row-group-prune up to 1000 inlined keys
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
-      .config("spark.ui.enabled", "false")
-      // bucketed-variant tables land in scratch, never the repo cwd
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
-          s"${System.getProperty("java.io.tmpdir")}/graft_warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Full materialization: the noop v2 sink evaluates every row and column
-    // of the final projection. A bare .count() lets Catalyst prune the
-    // expensive projections of non-aggregating queries (and EliminateSorts
-    // their orderBy) down to a parquet row count — that's not the workload.
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
+    val spark = Harness.session(Harness.cpus)
+    import Harness.{noop, r3}
     // Warm up the session (codegen compiler, parquet footer cache, shuffle
     // machinery) so the first timed query isn't charged with JVM startup.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -30,13 +12,11 @@ object Bench {
     // charged to whichever query reads the table first.
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { n =>
-      try {
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.read.parquet(s"$sfDir/$n.parquet").selectExpr("count(1)")
-          .collect()
-      } catch { case _: Throwable => () }
+      try spark.read.parquet(s"$sfDir/$n.parquet").selectExpr("count(1)")
+        .collect()
+      catch { case _: Throwable => () }
     }
-    try run(SparkEntry.entry(spark)) catch { case _: Throwable => () }
+    try noop(SparkEntry.entry(spark)) catch { case _: Throwable => () }
     // Cross-run calibration: a FIXED pure-compute, data-independent
     // workload timed first and last (min of 3 reps each). Its time
     // moves with the box/JVM session, never with the code or the data,
@@ -59,7 +39,7 @@ object Bench {
     // every other query's rep-1 is < 3×). Pre-touch that exact path
     // untimed so rep-1 measures the PLAN like everywhere else; the cost
     // is per-JVM, i.e. amortized to zero on a real cluster run.
-    try run(SparkEntry.queries("q100_bpe_pairs")(spark, sfDir))
+    try noop(SparkEntry.queries("q100_bpe_pairs")(spark, sfDir))
     catch { case _: Throwable => () }
     // A failed query must NOT report its (fast) time-to-failure as if it
     // were a result — record it as -1 so regressions are visible.
@@ -133,7 +113,7 @@ object Bench {
         val g0 = gcMs
         val t0 = System.nanoTime()
         val ok =
-          try { run(fn(spark, sfDir)); true }
+          try { noop(fn(spark, sfDir)); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             false
@@ -197,7 +177,6 @@ object Bench {
       .filter(r => contractTier(r._1) && r._2.sec >= 0)
       .map(_._2.sec).sum
     val engineSec = total - contractSec
-    def r3(v: Double): Double = math.rint(v * 1000) / 1000
     // The driver retains only the last 2000 chars of stdout — 252
     // abbreviated per-query entries (~3.3 KB) overflow it and truncate
     // the line mid-JSON (rounds 8–10: "parsed": null). The ONE line
@@ -231,7 +210,7 @@ object Bench {
             val ts = (1 to 2).map { i =>
               System.err.println(s"[bench] $name rep $i")
               val s0 = System.nanoTime()
-              run(fn(spark))
+              noop(fn(spark))
               (System.nanoTime() - s0) / 1e9
             }
             System.err.println(
@@ -276,11 +255,7 @@ object Bench {
         s""""gc_total_sec":$gcTotalSec,""" +
         s""""queries":$fullQs,"n_failed":$nFailed,""" +
         bucketed.fold("")(_ + ",") + s""""sf":"$sfDir"}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), fullJson + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
-    }
+    Harness.writeArtifact("bench", outPath, fullJson)
     // Compact one-liner sized for the driver's 2000-char stdout tail:
     // totals, calibration, load/GC attribution, the top-20 slowest
     // queries, and a pointer to the full-fidelity file.

@@ -144,6 +144,11 @@ class NumericPreprocessorModel private[ml] (override val uid: String,
     extends Model[NumericPreprocessorModel]
     with NumericPreprocessorParams with MLWritable {
 
+  /** Fit state, inspectable: per-key numeric metadata and the
+    * final-key vocabulary. */
+  def perKeyMetadata: DataFrame = fitted.perKey
+  def vocabulary: DataFrame = fitted.vocab
+
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema)
     Preprocessor.transform(dataset.toDF(), $(keyCol), $(valueCol), fitted)

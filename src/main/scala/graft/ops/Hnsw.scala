@@ -315,11 +315,12 @@ object Hnsw {
     * fraction of the part). */
   private val MaxInlineKeys = 100000
 
-  /** Chunk width for inlined prune lists — matched to the parquet
-    * In-pushdown setting (`spark.sql.parquet.pushdown
-    * .inFilterThreshold` = 1000, see [[sortedByKey]]): an `IN` list at
-    * or below the threshold reaches the scan as a real per-row-group
-    * or-chain filter, and parquet evaluates that chain RECURSIVELY —
+  /** Chunk width for inlined prune lists — and the parquet In-pushdown
+    * bound (`spark.sql.parquet.pushdown.inFilterThreshold`) every
+    * [[graft.Harness]] session sets from it, see [[sortedByKey]]: an
+    * `IN` list at or below the threshold reaches the scan as a real
+    * per-row-group or-chain filter, and parquet evaluates that chain
+    * RECURSIVELY —
     * ~4000 literals always overflow a default-size executor stack,
     * and 1000 overflowed ONCE under a deep whole-stage-codegen
     * calling context (an r14 search-curve run). The fix is at the
@@ -337,7 +338,7 @@ object Hnsw {
     * vs 25.2 s at 180k because its ~25k-cell list scanned the whole
     * members part row-level; chunked r14: 55.9 s, walls tracking
     * delta rows — bench/ANN_STREAM_AUDIT_SF100_r14.json). */
-  private val InlineChunk = 1000
+  private[graft] val InlineChunk = 1000
 
   /** Upper bound on the beam frontier (|queries|·ef rows) the search
     * loop will still broadcast: 4M narrow (qid, id, c) triples is
@@ -463,12 +464,13 @@ object Hnsw {
     * each row group then covers a narrow key span, so a maintenance
     * probe's `IN (...)` predicate skips every row group whose
     * [min, max] misses all of its batch-sized key list — the probe
-    * reads ∝ batch × row-group size instead of the part. Set
-    * `spark.sql.parquet.pushdown.inFilterThreshold` to ~1000 (its
-    * measured safe ceiling — parquet evaluates the pushed or-chain
-    * recursively and ~4000 values overflow the executor stack; the
-    * default 10 barely ever prunes): lists under it row-group-prune,
-    * larger lists remain row-level InSet filters that still commute
+    * reads ∝ batch × row-group size instead of the part. Sessions
+    * set `spark.sql.parquet.pushdown.inFilterThreshold` to
+    * [[InlineChunk]] (its measured safe ceiling — parquet evaluates
+    * the pushed or-chain recursively and ~4000 values overflow the
+    * executor stack; the default 10 barely ever prunes): lists under
+    * it row-group-prune, larger lists remain row-level InSet filters
+    * that still commute
     * below the keyed-resolve window — a narrow un-shuffled scan, the
     * graceful middle before [[MaxInlineKeys]] falls back to a
     * semi-join. */

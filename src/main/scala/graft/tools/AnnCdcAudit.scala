@@ -1,7 +1,9 @@
 package graft.tools
 
+import graft.Harness
+import graft.Harness.{r3, timeSec}
 import graft.ops.{AnnIndex, Hnsw, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,26 +37,7 @@ object AnnCdcAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val outPath = args.lift(1).getOrElse("ANN_CDC_AUDIT.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // keep batch-sized IN lists pushed as real per-row-group
-      // filters (the default threshold 10 degrades them to one global
-      // min/max range, which never prunes hash-valued keys). 1000 is
-      // the measured safe bound: parquet evaluates the or-chain
-      // recursively and ~4000 values overflow the executor stack;
-      // larger lists stay row-level InSet filters below the window
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timeSec(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
+    val spark = Harness.session(Harness.cpus)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding").localCheckpoint(true)
@@ -199,13 +182,7 @@ object AnnCdcAudit {
       s""""vector_match_rows":$vecMatchRows,""" +
       s""""vectors_match":${vecRows == stateRows && strayRows == 0L &&
         vecMatchRows == stateRows}}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[ann-cdc-audit] could not write " +
-        s"$outPath: ${e.getMessage}")
-    }
-    println(json)
+    Harness.emit("ann-cdc-audit", outPath, json)
     spark.stop()
   }
 }

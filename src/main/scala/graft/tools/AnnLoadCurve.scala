@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.Harness
+import graft.Harness.{r3, timeSec}
 import graft.ops.{AnnIndex, Hnsw, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,20 +30,7 @@ object AnnLoadCurve {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val outPath = args.lift(1).getOrElse("ANN_LOAD_CURVE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timeSec(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
+    val spark = Harness.session(Harness.cpus)
     def loadCountSec(path: String): (Double, Long) = {
       var rows = 0L
       val secs = (1 to 3).map { _ =>
@@ -107,13 +95,7 @@ object AnnLoadCurve {
       s""""compacted_load_count_sec":${r3(secC)},""" +
       s""""appended_load_count_sec":${r3(secF)},""" +
       s""""rows_match":${rowsC == rowsF}}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[ann-load-curve] could not write " +
-        s"$outPath: ${e.getMessage}")
-    }
-    println(json)
+    Harness.emit("ann-load-curve", outPath, json)
     spark.stop()
   }
 }

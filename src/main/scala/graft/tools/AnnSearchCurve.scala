@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.Harness
+import graft.Harness.{noop, r3, timeSec}
 import graft.ops.{AnnIndex, Hnsw, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** SERVING-side scale evidence for the persisted ANN index — the half
@@ -34,21 +35,7 @@ object AnnSearchCurve {
     val outPath = args.lift(1).getOrElse("ANN_SEARCH_CURVE.json")
     val grow = args.lift(2).map(_.toInt).getOrElse(1)
     val appends = args.lift(3).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the measured-safe parquet In-pushdown bound (see Hnsw)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timeSec(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
+    val spark = Harness.session(Harness.cpus)
 
     val emb = AnnStreamAudit.grownEmbeddings(spark, sfDir, grow)
       .localCheckpoint(true)
@@ -104,10 +91,9 @@ object AnnSearchCurve {
           "vec_id", "embedding").localCheckpoint(true)
         adjRows = adj.count()
       }
-      def once(): Unit =
+      def once(): Unit = noop(
         Hnsw.searchTopK(adj, vecs, "vec_id", "embedding",
-          queries, "qid", "qv", 9L, ml, steps = 2, ef = 10, k = 10)
-          .write.mode("overwrite").format("noop").save()
+          queries, "qid", "qv", 9L, ml, steps = 2, ef = 10, k = 10))
       val walls = (1 to 3).map(_ => timeSec(once()))
       // one counted pass: exact candidate-cosine work of the descent
       val (res, work) = Hnsw.searchTopKCounted(adj, vecs,
@@ -131,13 +117,7 @@ object AnnSearchCurve {
     val json = s"""{"sf":"$sfDir","grow":$grow,"n_seed":$n,""" +
       s""""planes":$planes,"max_level":$ml,"appends":$appends,""" +
       s""""queries":64,"fold_sec":${r3(foldSec)},$pre,$post}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[ann-search-curve] could not write " +
-        s"$outPath: ${e.getMessage}")
-    }
-    println(json)
+    Harness.emit("ann-search-curve", outPath, json)
     spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.Harness
+import graft.Harness.{r3, timeSec}
 import graft.ops.{AnnIndex, Hnsw, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -66,26 +68,7 @@ object AnnStreamAudit {
     val outPath = args.lift(1).getOrElse("ANN_STREAM_AUDIT.json")
     val grow = args.lift(2).map(_.toInt).getOrElse(1)
     val rebuildCheck = !args.lift(3).contains("norebuild")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // keep batch-sized IN lists pushed as real per-row-group
-      // filters (the default threshold 10 degrades them to one global
-      // min/max range, which never prunes hash-valued keys). 1000 is
-      // the measured safe bound: parquet evaluates the or-chain
-      // recursively and ~4000 values overflow the executor stack;
-      // larger lists stay row-level InSet filters below the window
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timeSec(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
+    val spark = Harness.session(Harness.cpus)
 
     val emb = grownEmbeddings(spark, sfDir, grow).localCheckpoint(true)
     val seedVecs = emb.filter(col("vec_id") % 10 =!= 0)
@@ -157,13 +140,7 @@ object AnnStreamAudit {
       s""""seed_build_save_sec":${r3(seedSec)},""" +
       s""""batches":[${batches.mkString(",")}],""" +
       s""""final_loaded_rows":$finalRows$checkJson}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[ann-stream-audit] could not write " +
-        s"$outPath: ${e.getMessage}")
-    }
-    println(json)
+    Harness.emit("ann-stream-audit", outPath, json)
     spark.stop()
   }
 }

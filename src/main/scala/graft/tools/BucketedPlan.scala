@@ -1,22 +1,14 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Harness, SparkEntry}
 
 /** Dump the bucketed-variant plans (SCALE.md zero-exchange claim). */
 object BucketedPlan {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse_plan")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(cpus = 4)
+    // static plans: the exchanges AQE would otherwise rewrite at runtime
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     SparkEntry.bucketedSetup(spark, sfDir)
     SparkEntry.bucketedQueries.toSeq.sortBy(_._1).foreach {
       case (name, fn) =>

@@ -1,8 +1,9 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Harness, SparkEntry}
+import graft.Harness.{noop, r3, timeSec}
 import graft.ops.{Hnsw, Similarity}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale audit for the layered ANN (q230/q231): MEASURED work counters
@@ -36,13 +37,7 @@ object HnswAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = args.lift(1).getOrElse("HNSW_AUDIT.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val corpus = emb.filter(col("vec_id") % 10 =!= 0)
@@ -52,14 +47,6 @@ object HnswAudit {
         col("embedding").as("q_vec"))
     val n = corpus.count()
     val nq = queries.count()
-
-    def timeSec(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
 
     /** One parameterization's full audit: counters + clean walls. */
     def audit(label: String, seed: Long, maxLevel: Int, m: Int,
@@ -94,8 +81,8 @@ object HnswAudit {
       val adjRows = adj.count()
       s""""$label":{"max_level":$maxLevel,"m":$m,"bands":$bands,""" +
         s""""steps":$steps,"ef":$ef,"adj_rows":$adjRows,""" +
-        s""""build_wall_sec":${math.rint(buildSec * 1000) / 1000},""" +
-        s""""search_wall_sec":${math.rint(searchSec * 1000) / 1000},""" +
+        s""""build_wall_sec":${r3(buildSec)},""" +
+        s""""search_wall_sec":${r3(searchSec)},""" +
         s""""build_cand_cos":$buildCand,""" +
         s""""search_cand_cos":$searchCand,""" +
         s""""build_work":[${buildWork.mkString(",")}],""" +
@@ -115,13 +102,7 @@ object HnswAudit {
 
     val json = s"""{"sf":"$sfDir","corpus_n":$n,"queries_n":$nq,""" +
       s"""$contract,$production}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[hnsw-audit] could not write $outPath: " +
-        e.getMessage)
-    }
-    println(json)
+    Harness.emit("hnsw-audit", outPath, json)
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.{Harness, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Spark-job counter for a declared query — the r15 evidence tool for
   * fixed-cost claims the final `explain` cannot show (an index
@@ -10,20 +10,13 @@ import org.apache.spark.sql.SparkSession
   * changes the JOB COUNT, not the last plan's shape). Runs the query
   * twice with a job-start listener and prints both counts + walls
   * (rep 2 is the steady state).
-  * Usage: runMain graft.tools.JobCount <sfDir> <query> [cpus] */
+  * Usage: runMain graft.tools.JobCount <sfDir> <query> (cores from
+  * `SPARK_GRAFT_CPUS`) */
 object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args.lift(1).getOrElse("q256_ann_index_stream")
-    val cpus = args.lift(2)
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
@@ -35,8 +28,7 @@ object JobCount {
       Thread.sleep(300) // let queued listener events land on rep edges
       jobs.set(0)
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
+      Harness.noop(SparkEntry.queries(name)(spark, sfDir))
       Thread.sleep(300)
       println(f"[jobcount] $name rep$rep jobs=${jobs.get()}%d " +
         f"wall=${(System.nanoTime() - t0) / 1e9}%.2f s")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Harness, SparkEntry}
 
 /** Dump formatted physical plans for the driver-contract queries —
   * the "is this the plan you'd want at 100 TB" review loop.
@@ -10,13 +9,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val which = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(cpus = 4)
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (which.isEmpty || which.contains(name)) {
         println(s"\n━━━━━━━━ $name ━━━━━━━━")

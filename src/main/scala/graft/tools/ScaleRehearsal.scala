@@ -1,7 +1,9 @@
 package graft.tools
 
+import graft.Harness
+import graft.Harness.{noop, r3, timeSec}
 import graft.ops.{Dedup, Hnsw, Similarity, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PRODUCTION-path scale rehearsal: run the auto-scaled
@@ -34,22 +36,7 @@ object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val outPath = args.lift(1).getOrElse("SCALE_REHEARSAL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timeSec(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
+    val spark = Harness.session(Harness.cpus)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding").localCheckpoint(true)
@@ -181,13 +168,7 @@ object ScaleRehearsal {
 
     val json = s"""{"sf":"$sfDir",$hnsw,$semdedup,$substring,""" +
       s"""$tokenizePack,$minhash,$bm25,$knng,$sharding}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[rehearsal] could not write $outPath: " +
-        e.getMessage)
-    }
-    println(json)
+    Harness.emit("rehearsal", outPath, json)
     spark.stop()
   }
 }

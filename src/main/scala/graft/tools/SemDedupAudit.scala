@@ -1,7 +1,9 @@
 package graft.tools
 
+import graft.Harness
+import graft.Harness.{noop, r3, timeSec}
 import graft.ops.{Dedup, Similarity, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale audit for k-means-scoped SemDeDup (q239/q254's pair stage):
@@ -38,22 +40,7 @@ object SemDedupAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = args.lift(1).getOrElse("SEMDEDUP_AUDIT.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timeSec(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
+    val spark = Harness.session(Harness.cpus)
 
     /** One (shape × parameterization) audit: price the pair stage
       * exactly, then time a clean run of it. */
@@ -126,13 +113,7 @@ object SemDedupAudit {
 
     val json = s"""{"sf":"$sfDir","target_cluster_size":$target,""" +
       s"""$embContract,$embProd,$docContract,$docProd}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[semdedup-audit] could not write $outPath: " +
-        e.getMessage)
-    }
-    println(json)
+    Harness.emit("semdedup-audit", outPath, json)
     spark.stop()
   }
 }

@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.Harness
+import graft.Harness.{r3, timeSec}
 import graft.ops.{AnnIndex, TextIndex, TextOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,23 +31,7 @@ object TextIndexAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val outPath = args.lift(1).getOrElse("TEXTINDEX_AUDIT.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // append's stored-id overlap probe pushes the batch's ids into
-      // the docs scan; ≤1000 ids row-group-prune (the measured safe
-      // parquet or-chain bound), larger batches stay row-level InSet
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timeSec(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
+    val spark = Harness.session(Harness.cpus)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text").localCheckpoint(true)
@@ -120,13 +105,7 @@ object TextIndexAudit {
       s""""compact_wall_sec":${r3(compactSec)},""" +
       s""""search_rows":${got.length},""" +
       s""""search_match":${got == exp}}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[textindex-audit] could not write " +
-        s"$outPath: ${e.getMessage}")
-    }
-    println(json)
+    Harness.emit("textindex-audit", outPath, json)
     spark.stop()
   }
 }

@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.Harness
+import graft.Harness.{r3, timeSec}
 import graft.ops.{AnnIndex, TextIndex}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -47,21 +48,7 @@ object TextSearchCurve {
     val outPath = args.lift(1).getOrElse("TEXT_SEARCH_CURVE.json")
     val grow = args.lift(2).map(_.toInt).getOrElse(1)
     val appends = args.lift(3).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the measured-safe parquet In-pushdown bound (see Hnsw)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timeSec(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
+    val spark = Harness.session(Harness.cpus)
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -151,13 +138,7 @@ object TextSearchCurve {
       s""""pre_fold":${side(preW, preM, preT,
         AnnIndex.maxBatches(spark, idx))},""" +
       s""""post_fold":${side(postW, postM, postT, 1L)}}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[text-search-curve] could not write " +
-        s"$outPath: ${e.getMessage}")
-    }
-    println(json)
+    Harness.emit("text-search-curve", outPath, json)
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.ml.{GraftPreprocessor, KMeansClusterer, KMeansClustererModel}
+import graft.ml.{KMeansClusterer, KMeansClustererModel, NumericPreprocessor,
+  NumericPreprocessorModel}
 import graft.ops.Similarity
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.sql.functions._
@@ -10,13 +11,13 @@ import org.apache.spark.sql.functions._
 class MlSpec extends SparkSpec {
   import spark.implicits._
 
-  test("GraftPreprocessor works inside an MLlib Pipeline") {
+  test("NumericPreprocessor works inside an MLlib Pipeline") {
     val train = Seq(("a", 1.0), ("a", 2.0), ("a", 3.0)).toDF("k", "v")
     val heldOut = Seq(("a", 10.0), ("zzz", 4.0)).toDF("k", "v")
-    val stage = new GraftPreprocessor()
+    val stage = new NumericPreprocessor()
       .setKeyCol("k").setValueCol("v").setNormalizer("std")
-      .setMinValidVocabElementObservations(1L)
-      .setMinUniqueNumericalObservations(2L)
+      .setMinValidVocabObs(1.0)
+      .setMinUniqueNumericalObs(2.0)
       .setMaxNumericalValueFrequency(0.9)
     val model = new Pipeline().setStages(Array(stage)).fit(train)
     val out = model.transform(heldOut)
@@ -26,8 +27,7 @@ class MlSpec extends SparkSpec {
     assert(out("a")._1.contains(8.0)) // (10-2)/1 with TRAIN params
     assert(out("zzz")._2 == 0) // unknown key → UNK
     // fit state is inspectable DataFrames
-    val m = model.stages.head
-      .asInstanceOf[graft.ml.GraftPreprocessorModel]
+    val m = model.stages.head.asInstanceOf[NumericPreprocessorModel]
     assert(m.perKeyMetadata.count() == 1)
     assert(m.vocabulary.count() == 2) // UNK + 'a'
   }

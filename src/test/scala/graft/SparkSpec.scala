@@ -3,17 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs (one JVM, one context). */
+/** Shared local SparkSession for all specs (one JVM, one context): the
+  * engine session every main runs on ([[Harness]]) at 4 cores, plus the
+  * graft SQL extensions. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = Harness.builder(cpus = 4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // bucketed test tables land in scratch, never the repo cwd
-    .config("spark.sql.warehouse.dir",
-      s"${System.getProperty("java.io.tmpdir")}/graft_test_warehouse")
     .withExtensions(new graft.GraftExtensions)
     .getOrCreate()
 }

@@ -2,7 +2,8 @@
 # Run a graft main class against the ALREADY-COMPILED classes (no sbt,
 # no recompile) — lets long audit/bench chains run in the background
 # while sources are being edited. Mirrors build.sbt's forked-run JVM
-# options (JDK17 add-opens, UTC, code cache, heap).
+# options (JDK17 add-opens, heap, code cache, stack); session settings
+# belong to graft.Harness.
 # Usage: tools/runmain.sh <mainClass> [args...]
 set -euo pipefail
 MAIN="$1"; shift
@@ -17,8 +18,6 @@ for p in java.base/java.lang java.base/java.lang.invoke \
   ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
 done
 exec java $ADD_OPENS \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   "-Xmx${SPARK_DRIVER_MEM:-24g}" \
   -XX:ReservedCodeCacheSize=1g \
   -Xss4m \
