@@ -1826,8 +1826,8 @@ object SparkEntry {
       // every web corpus runs before tokenization): HTML extract →
       // canonical normalize → token-count quality gate → exact
       // first-occurrence dedup. Catalyst fuses extract+normalize+gate
-      // into one codegen span over the scan; the only exchanges are
-      // the dedup's fingerprint agg + semi-join — composing operators
+      // into one codegen span over the scan; the only exchange is
+      // the dedup's fingerprint window — composing operators
       // does NOT stack their plan costs, which is the point of
       // declaring them as columns instead of running staged jobs.
       val html = concat(
@@ -1843,17 +1843,9 @@ object SparkEntry {
           TextOps.normalize(TextOps.extractHtmlText(html))
             .as("clean_text"))
         .filter(TextOps.tokenCount(col("clean_text")) >= 30)
-      // first-occurrence dedup as a per-fingerprint window, NOT
-      // Dedup.exact's agg+semi-join: the semi-join form evaluates the
-      // whole extract/normalize chain on BOTH join sides (measured 2×
-      // the narrow cost), while the window shuffles once and keeps the
-      // chain single-pass — the right dedup shape when the upstream is
-      // expensive and row-preserving output is wanted.
-      cleaned
-        .withColumn("__fp", TextOps.fingerprint(col("clean_text")))
-        .withColumn("__keep", min(col("doc_id")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("__fp")))
-        .filter(col("doc_id") === col("__keep"))
+      // first-occurrence dedup: Dedup.exact is one per-fingerprint
+      // window, so the extract/normalize chain stays single-pass
+      Dedup.exact(cleaned, "doc_id", "clean_text")
         .select(col("doc_id"), col("clean_text"),
           TextOps.tokenCount(col("clean_text")).cast("long").as("n_tok"))
     }),

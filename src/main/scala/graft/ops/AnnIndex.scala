@@ -27,7 +27,9 @@ import org.json4s.jackson.JsonMethods
   * recorded schema: opening, loading and committing a store run no
   * Spark job of their own (the log carries schema and table
   * properties so readers never infer them from files — the Delta Lake
-  * design). Every append writes its bumped manifest as a NEW
+  * design). Query entry points built on the store may: e.g.
+  * [[TextIndex.search]] runs one small rollup job when called, before
+  * it returns its plan. Every append writes its bumped manifest as a NEW
   * `_manifest-v(N+1)/` directory (readers resolve the highest
   * committed version; the prior version is kept one cycle, then
   * pruned) — a torn APPEND (delta batch written, manifest version not
@@ -501,29 +503,57 @@ object AnnIndex {
   /** Batch-resolved part relations for a manifest already in hand:
     * plain union for un-keyed parts; latest-batch-wins per key group
     * then tombstone drop for keyed parts. Lazy scans throughout, each
-    * batch with its recorded schema (no schema-inference job). */
+    * batch with its recorded schema (no schema-inference job).
+    *
+    * An un-keyed part reads each RUN of consecutive batches with equal
+    * recorded schemas as ONE multi-path relation, and unions only
+    * across runs (a batch whose types differ — e.g. an int column in
+    * b0 that a later delta wrote as long — starts a new run, and
+    * `unionByName` widens it exactly as the per-batch union did): one
+    * scan, one scan stage and one generated class per run instead of
+    * per batch. A run is cut at Spark's parallel-listing threshold so
+    * building the relation still lists files on the driver, never in
+    * a listing job. Keyed parts keep one read per batch: latest-batch-
+    * wins needs the batch column. */
   private def partsFrom(spark: SparkSession, path: String,
       entries: Seq[PartEntry]): Map[String, DataFrame] =
     entries.map { case e @ PartEntry(name, keyCols, schemas) =>
-      val union = schemas.zipWithIndex.map { case (schema, b) =>
-        spark.read.schema(schema).parquet(s"$path/$name/b$b")
-          .withColumn(batchCol, lit(b))
-      }.reduce(_ unionByName _)
+      def dir(b: Int) = s"$path/$name/b$b"
       val resolved =
-        if (keyCols.isEmpty || e.batches == 1) {
-          if (keyCols.isEmpty) union.drop(batchCol)
-          else dropTombstones(union, keyCols).drop(batchCol)
+        if (keyCols.isEmpty) {
+          val maxPaths = spark.conf
+            .get("spark.sql.sources.parallelPartitionDiscovery.threshold",
+              "32").toInt
+          runs(schemas).flatMap { case (schema, bs) =>
+            bs.grouped(math.max(1, maxPaths)).map(g =>
+              spark.read.schema(schema).parquet(g.map(dir): _*))
+          }.reduce(_ unionByName _)
         } else {
-          val keys = keyCols.split(",").toSeq
-          val w = Window.partitionBy(keys.map(col): _*)
-          dropTombstones(
-            union.withColumn("__mb", max(col(batchCol)).over(w))
-              .filter(col(batchCol) === col("__mb"))
-              .drop("__mb"),
-            keyCols).drop(batchCol)
+          val union = schemas.zipWithIndex.map { case (schema, b) =>
+            spark.read.schema(schema).parquet(dir(b))
+              .withColumn(batchCol, lit(b))
+          }.reduce(_ unionByName _)
+          val latest =
+            if (e.batches == 1) union
+            else {
+              val w = Window.partitionBy(keyCols.split(",").toSeq.map(col): _*)
+              union.withColumn("__mb", max(col(batchCol)).over(w))
+                .filter(col(batchCol) === col("__mb"))
+                .drop("__mb")
+            }
+          dropTombstones(latest, keyCols).drop(batchCol)
         }
       name -> resolved
     }.toMap
+
+  /** Batch indices grouped into runs of consecutive batches with equal
+    * recorded schemas, in batch order. */
+  private def runs(schemas: Seq[StructType]): Seq[(StructType, Seq[Int])] =
+    schemas.zipWithIndex.foldLeft(Vector.empty[(StructType, Vector[Int])]) {
+      case (acc :+ ((s, bs)), (schema, b)) if s == schema =>
+        acc :+ (s -> (bs :+ b))
+      case (acc, (schema, b)) => acc :+ (schema -> Vector(b))
+    }
 
   /** An OPEN index: generation resolved and manifest read ONCE, part
     * relations and params derived from that snapshot. The maintenance
@@ -625,12 +655,18 @@ object AnnIndex {
     * survivors, resets `mb` to 0 and empties it ([[Hnsw.compactIndex]],
     * [[TextIndex.compact]]). */
   def liveRows(rows: DataFrame, ledger: DataFrame, key: String)
-      : DataFrame = {
-    val th = ledger.groupBy(col(key)).agg(max(col("th")).as("__th"))
+      : DataFrame =
+    liveUnder(rows,
+      ledger.groupBy(col(key)).agg(max(col("th")).as("__th")), key)
+
+  /** [[liveRows]] against the ledger already reduced to one `(key,
+    * __th)` row per key — the maximum threshold — e.g. a local relation
+    * built from a collected ledger. */
+  private[graft] def liveUnder(rows: DataFrame, th: DataFrame,
+      key: String): DataFrame =
     rows.join(broadcast(th), Seq(key), "left")
       .filter(col("__th").isNull || col("mb") >= col("__th"))
       .drop("__th")
-  }
 
   /** Tombstone rows (all non-key columns null) delete their group. */
   private def dropTombstones(df: DataFrame, keyCols: String)

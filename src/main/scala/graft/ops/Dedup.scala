@@ -12,17 +12,24 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Exact dedup on a normalized-content hash: keep the lowest-id document
-    * per fingerprint. One hash-partition shuffle on the fingerprint (a
-    * groupBy on a 64-bit key — no full-text shuffle: only (fp, id) pairs
-    * move, then a semi-join brings back survivors). */
-  def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val keep = docs
-      .select(col(idCol), TextOps.fingerprint(col(textCol)).as("fp"))
-      .groupBy("fp").agg(min(col(idCol)).as(idCol))
-      .select(idCol)
-    docs.join(keep, Seq(idCol), "left_semi")
-  }
+  /** Exact dedup on a normalized-content hash: keep the lowest-id
+    * document(s) per fingerprint — the rows whose id equals the minimum
+    * id of their fingerprint, so exactly one row per fingerprint when
+    * ids are unique (a repeated id keeps each of its rows that holds
+    * its fingerprint's minimum; null text is one fingerprint like any
+    * other). One pass: a per-fingerprint window, so the upstream is
+    * evaluated ONCE and only one hash-partition shuffle on the 64-bit
+    * fingerprint moves the rows. The former agg + semi-join form
+    * evaluated an unpinned upstream on both join sides (2× the narrow
+    * cost of an HTML-extract chain), and kept a second survivor in a
+    * fingerprint whose non-minimum row carried an id that was another
+    * fingerprint's minimum. */
+  def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.withColumn("__fp", TextOps.fingerprint(col(textCol)))
+      .withColumn("__keep",
+        min(col(idCol)).over(Window.partitionBy(col("__fp"))))
+      .filter(col(idCol) === col("__keep"))
+      .drop("__fp", "__keep")
 
   /** The fingerprint STORE for incremental dedup: one (fp, docId) row
     * per distinct normalized content, docId = first (minimum) holder —

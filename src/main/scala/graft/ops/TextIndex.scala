@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Persisted, incrementally-maintained BM25 inverted index — the
   * text-retrieval twin of the [[AnnIndex]]+[[Hnsw]] maintenance
@@ -34,7 +36,7 @@ import org.apache.spark.sql.functions._
   *    or `docs` row is live iff its `mb` (the `postings` batch count
   *    when it was written) is ≥ every `th` of its id. Deletes and CDC
   *    updates are ledger rows plus ordinary delta appends, so a search
-  *    between folds pays one broadcast ledger join and nothing else;
+  *    between folds pays one ledger filter and nothing else;
   *  - `pending` (idCol, textCol): keyed on the id and always empty —
   *    kept so the layout readers name stays the same.
   *
@@ -42,10 +44,11 @@ import org.apache.spark.sql.functions._
   * `termdf` on the query's terms BEFORE any join or agg — parquet
   * min/max + dictionary pushdown prunes the scan to the query
   * vocabulary, the df/stats rollups are ≤ |terms|- and
-  * ≤ |batches|-sized broadcasts, and the only wide stage is the
-  * per-doc score agg over matched postings (map-side combinable,
-  * k-bounded output). That is the difference between BM25-as-a-
-  * nightly-batch-job and BM25-as-a-service.
+  * ≤ |batches|-sized rows collected in ONE small job when `search` is
+  * called (the ledger rides along), and the only wide stage of the
+  * returned plan is the per-doc score agg over matched postings
+  * (map-side combinable, k-bounded output). That is the difference
+  * between BM25-as-a-nightly-batch-job and BM25-as-a-service.
   */
 object TextIndex {
   private val Kind = "bm25"
@@ -266,13 +269,14 @@ object TextIndex {
 
   /** Fold the index to single-batch form AND physically apply the
     * deletion ledger — the Lucene merge: the live `postings` and
-    * `docs` rows ([[AnnIndex.liveRows]]) are kept with `mb` reset to
-    * 0 (no stored text is ever re-tokenized), df is re-counted from
-    * the kept postings (one vocabulary-bounded agg over index rows),
-    * stats re-derive from the kept doc list, and the ledger empties —
-    * freeing the deleted ids for re-insertion and making search's
-    * df/N exact again (equality with save(final corpus) is
-    * spec-pinned). `dst` must differ from `src`, as in
+    * `docs` rows ([[liveUnder]], against the ledger collected once for
+    * both — an inlined filter, no join) are kept with
+    * `mb` reset to 0 (no stored text is ever re-tokenized), df is
+    * re-counted from the kept postings (one vocabulary-bounded agg
+    * over index rows), stats re-derive from the kept doc list, and the
+    * ledger empties — freeing the deleted ids for re-insertion and
+    * making search's df/N exact again (equality with save(final
+    * corpus) is spec-pinned). `dst` must differ from `src`, as in
     * [[AnnIndex.compact]]. */
   def compact(spark: SparkSession, srcPath: String, dstPath: String)
       : Unit = {
@@ -281,9 +285,13 @@ object TextIndex {
     val (parts, params) = AnnIndex.load(spark, srcPath)
     requireStore("compact", srcPath, params, parts.keys)
     val idCol = params("id_col")
-    val live = Seq("postings", "docs").map(p => p ->
-      AnnIndex.liveRows(parts(p), parts("deleted"), idCol)
-        .withColumn("mb", lit(0))).toMap
+    // the ledger is collected once for both parts
+    val ledger = parts("deleted").select(col(idCol), col("th")).collect()
+      .map(r => r.get(0) -> r.getInt(1)).toSeq
+    val live = Seq("postings", "docs").map { p =>
+      p -> liveUnder(parts(p), parts("deleted").schema(idCol), ledger)
+        .withColumn("mb", lit(0))
+    }.toMap
     AnnIndex.save(dstPath,
       clusteredParts(live + ("termdf" -> live("postings")
         .groupBy(col("term")).agg(count(lit(1)).as("df_delta"))),
@@ -305,8 +313,11 @@ object TextIndex {
     *
     * Scale shape: the stored-id overlap check collects UP TO
     * [[MaxInlineIds]] batch ids to the driver (bounded by the
-    * micro-batch, the trigger-sized quantity) and probes the `docs`
-    * part with an `id IN (...)` predicate — and because the
+    * micro-batch, the trigger-sized quantity), probes the `docs`
+    * part with an `id IN (...)` predicate and collects the stored ids
+    * it finds (the same job returns the batch's deletes among them),
+    * so the prune is an IN filter and the count needs no job — and
+    * because the
     * INDEX-SIZED write sites id-cluster the docs part (save/compact
     * via [[clusteredParts]]; micro-batch deltas stay unclustered —
     * they are a couple of row groups regardless), parquet row-group
@@ -332,8 +343,10 @@ object TextIndex {
 
   /** The one write path behind [[append]] and [[applyCdc]]: dedup and
     * conflict guard, stored-id prune (ids in `dels` do not count as
-    * stored), then ONE [[AnnIndex.appendTo]] of the ledger rows and the
-    * `mb`-stamped deltas. Nothing to write returns the same handle. */
+    * stored; a collected probe in the inline regime, the anti-join in
+    * the bulk one), then ONE [[AnnIndex.appendTo]] of the ledger rows
+    * and the `mb`-stamped deltas. Nothing to write returns the same
+    * handle. */
   private def land(op: String, store: AnnIndex.Store,
       dels: Option[DataFrame], docs: DataFrame, idCol: String,
       textCol: String): (Long, AnnIndex.Store) = {
@@ -346,21 +359,41 @@ object TextIndex {
         s"${cs.mkString(", ")} within one batch — an " +
         "arbitrary winner would be partition-order dependent; " +
         "resolve upstream (the maintenance stream's seqCol)")
-    val (n, delta) =
-      if (ids.exists(_.isEmpty)) (0L, Map.empty[String, DataFrame])
-      else {
+    val (n, fresh) = ids match {
+      case Some(ks) if ks.isEmpty => (0L, arriving)
+      case Some(ks) =>
+        // inline regime: ONE job collects the stored ids among the
+        // batch ids together with the batch's deletes among them; the
+        // prune is an IN filter over the pinned arrivals and the count
+        // is known on the driver
+        val docIds = store.parts("docs")
+          .select(col(idCol), lit(false).as("__del"))
+        val probe = dels.fold(docIds)(d => docIds.unionByName(
+            d.select(col(idCol), lit(true).as("__del"))))
+          .filter(col(idCol).isin(ks: _*)).collect()
+        val (deleted, kept) = probe.partition(_.getBoolean(1))
+        val gone = deleted.map(_.get(0)).toSet
+        val stored = kept.map(_.get(0)).filterNot(gone).distinct.toSeq
+        // a null id is never stored, and the anti-join this replaces
+        // kept it
+        (ks.length - stored.length.toLong,
+          if (stored.isEmpty) arriving
+          else arriving.filter(col(idCol).isNull ||
+            !col(idCol).isin(stored: _*)))
+      case None =>
+        // bulk regime: the distributed anti-join against the full
+        // `docs` part
         val docIds = store.parts("docs").select(col(idCol))
-        val inBatch = ids.fold(docIds)(ks =>
-          docIds.filter(col(idCol).isin(ks: _*)))
-        val stored = dels.fold(inBatch)(d =>
-          inBatch.join(d.select(col(idCol)), Seq(idCol), "left_anti"))
+        val stored = dels.fold(docIds)(d =>
+          docIds.join(d.select(col(idCol)), Seq(idCol), "left_anti"))
         val fresh = arriving.join(stored, Seq(idCol), "left_anti")
           .localCheckpoint(true)
-        val n = fresh.count()
-        (n, if (n == 0) Map.empty[String, DataFrame]
-          else deltaWriteParts(stamped(deltaParts(fresh, idCol, textCol),
-            store.partBatches("postings")), idCol, n))
-      }
+        (fresh.count(), fresh)
+    }
+    val delta =
+      if (n == 0) Map.empty[String, DataFrame]
+      else deltaWriteParts(stamped(deltaParts(fresh, idCol, textCol),
+        store.partBatches("postings")), idCol, n)
     val writes = delta ++
       dels.map(d => "deleted" -> ledgerRows(store, d, idCol))
     (n, if (writes.isEmpty) store else AnnIndex.appendTo(store, writes))
@@ -373,7 +406,16 @@ object TextIndex {
     * ([[AnnIndex.liveRows]]): deleted and superseded versions never
     * score, while their df/N stay counted until the fold (the Lucene
     * semantics). Updates need no query-time work — they were indexed
-    * as ordinary deltas when they arrived. */
+    * as ordinary deltas when they arrived.
+    *
+    * Calling `search` runs ONE small job ([[rollupRows]]): every
+    * `stats` row, the query terms' `termdf` rows and the ledger,
+    * collected together. N and the length sum are summed on the driver
+    * as longs (avg_dl is the same double division the SQL form did),
+    * df per term becomes a literal map, and the ledger an inlined
+    * filter ([[liveUnder]]) — none of them is an exchange or a
+    * broadcast job of the returned plan, whose only wide stage is the
+    * per-doc score agg over matched postings. */
   def search(spark: SparkSession, path: String, query: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val qt = query.trim.toLowerCase.split("\\s+")
@@ -382,31 +424,78 @@ object TextIndex {
     val (parts, params) = AnnIndex.load(spark, path)
     requireStore("search", path, params, parts.keys)
     val idCol = params("id_col")
-    // batches-sized and |terms|-sized rollups — broadcast into the
-    // posting scan so the only wide stage is the per-doc score agg
-    val stats = parts("stats")
-      .agg(sum(col("n_docs")).cast("double").as("__n_docs"),
-        (sum(col("len_sum")).cast("double") /
-          sum(col("n_docs")).cast("double")).as("__avg_dl"))
-    val df = parts("termdf")
-      .filter(col("term").isin(qt: _*))
-      .groupBy(col("term"))
-      .agg(sum(col("df_delta")).as("df"))
-    // the ledger is deletions-since-compact — broadcast-sized
-    AnnIndex.liveRows(parts("postings").filter(col("term").isin(qt: _*)),
-        parts("deleted"), idCol)
-      .join(broadcast(df), Seq("term"))
-      .crossJoin(broadcast(stats))
+    val rows = rollupRows(parts, qt, idCol).collect()
+    def of(part: Int) = rows.iterator.filter(_.getInt(0) == part)
+    val (nDocs, lenSum) = of(0).foldLeft((0L, 0L)) { case ((n, l), r) =>
+      (n + r.getLong(3), l + r.getLong(4))
+    }
+    val df = of(1).toSeq.groupMapReduce(_.getString(1))(_.getLong(3))(_ + _)
+    // a query term without a df row has no postings: filtering on the
+    // terms WITH one is the inner join the df rollup used to be
+    val terms = qt.filter(df.contains)
+    val dfOf = element_at(typedLit(df), col("term"))
+    val matched = parts("postings").filter(col("term").isin(terms: _*))
+    liveUnder(matched, parts("deleted").schema(idCol),
+        of(2).map(r => r.get(2) -> r.getLong(3).toInt).toSeq)
       .select(col(idCol),
-        (log(lit(1.0) + (col("__n_docs") - col("df") + 0.5) /
-            (col("df") + 0.5)) *
+        (log(lit(1.0) + (lit(nDocs.toDouble) - dfOf + 0.5) /
+            (dfOf + 0.5)) *
           (col("tf") * (k1 + 1.0)) /
           (col("tf") + lit(k1) * (lit(1.0 - b) +
-            lit(b) * col("dl").cast("double") / col("__avg_dl"))))
+            lit(b) * col("dl").cast("double") /
+              lit(lenSum.toDouble / nDocs.toDouble))))
           .as("bm25"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hit"),
         round(sum(col("bm25")), 6).as("score"))
       .orderBy(desc("score"), asc(idCol)).limit(k)
+  }
+
+  /** The small inputs of [[search]] as ONE narrow union, collected in
+    * one job: `(part, term, id, a, b)` rows — part 0 = every `stats`
+    * row (a = n_docs, b = len_sum), 1 = the `termdf` rows of the query
+    * terms (term, a = df_delta; the term IN is pushed into the scan),
+    * 2 = the `deleted` ledger (id, a = th). */
+  private[graft] def rollupRows(parts: Map[String, DataFrame],
+      qt: Seq[String], idCol: String): DataFrame = {
+    val idType = parts("deleted").schema(idCol).dataType
+    val none = lit(null)
+    def tagged(df: DataFrame, part: Int, term: Column, id: Column,
+        a: Column, b: Column) =
+      df.select(lit(part).as("part"), term.cast("string").as("term"),
+        id.cast(idType).as("id"), a.cast("long").as("a"),
+        b.cast("long").as("b"))
+    tagged(parts("stats"), 0, none, none, col("n_docs"), col("len_sum"))
+      .union(tagged(parts("termdf").filter(col("term").isin(qt: _*)), 1,
+        col("term"), none, col("df_delta"), none))
+      .union(tagged(parts("deleted"), 2, none, col(idCol), col("th"), none))
+  }
+
+  /** `rows` stamped `mb` that are live under a collected deletion
+    * ledger `(id, th)` — the [[AnnIndex.liveRows]] rule: dead iff some
+    * ledger row of its id has `th > mb`. Up to [[MaxInlineIds]] ledger
+    * rows the rule is an inlined filter, one hashed IN set per distinct
+    * `th` (one per append since the fold): no join and no broadcast
+    * job. A larger ledger joins as a broadcast local relation of each
+    * id's maximum `th` — the driver-side size the broadcast of the
+    * former SQL `max(th)` rollup had. A null id matches no ledger row,
+    * as in the join. */
+  private[graft] def liveUnder(rows: DataFrame, idField: StructField,
+      ledger: Seq[(Any, Int)], inlineMax: Int = MaxInlineIds)
+      : DataFrame = {
+    val id = col(idField.name)
+    val keyed = ledger.filter(_._1 != null)
+    if (keyed.isEmpty) rows
+    else if (keyed.length <= inlineMax)
+      rows.filter(id.isNull || !keyed.groupMap(_._2)(_._1).toSeq
+        .sortBy(_._1).map { case (th, ids) =>
+          col("mb") < th && id.isin(ids.distinct: _*)
+        }.reduce(_ || _))
+    else AnnIndex.liveUnder(rows, rows.sparkSession.createDataFrame(
+        keyed.groupMapReduce(_._1)(_._2)(math.max).toSeq
+          .map { case (k, th) => Row(k, th) }.asJava,
+        StructType(Seq(idField.copy(nullable = true),
+          StructField("__th", IntegerType)))),
+      idField.name)
   }
 }

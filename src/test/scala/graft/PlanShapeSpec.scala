@@ -479,9 +479,10 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("TextIndex.search: the query-term predicate is PUSHED into " +
-    "both parquet scans (postings and termdf), df/stats stay " +
-    "broadcast, the one exchange is the per-doc score agg") {
+  test("TextIndex.search after a fold: the query-term predicate is " +
+    "PUSHED into the postings scan and into the rollup job's termdf " +
+    "scan; df, N and avg_dl arrive as literals and the empty ledger " +
+    "adds no join — the one exchange is the per-doc score agg") {
     withStaticPlans {
       import org.apache.spark.sql.functions.col
       val tmp = java.nio.file.Files
@@ -490,38 +491,40 @@ class PlanShapeSpec extends SparkSpec {
         spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text")),
         "doc_id", "text")
-      val df = graft.ops.TextIndex.search(spark, tmp,
-        "merge window sort", 10)
-      val plan = df.queryExecution.executedPlan
-      val termScans = plan.collect {
+      val query = "merge window sort"
+      val df = graft.ops.TextIndex.search(spark, tmp, query, 10)
+      val (parts, _) = graft.ops.AnnIndex.load(spark, tmp)
+      val rollup = graft.ops.TextIndex.rollupRows(parts,
+        query.split(" ").toSeq, "doc_id")
+      def termScans(d: DataFrame) = d.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
             if f.metadata.get("PushedFilters")
-              .exists(_.contains("In(term")) => f
+              .exists(_.contains("In(term")) =>
+          f.relation.location.rootPaths.map(_.getParent.getName)
       }
-      assert(termScans.length == 2,
-        "the term IN (...) filter must reach BOTH the postings and " +
-          "termdf parquet scans (PushedFilters) — without it a query " +
-          "reads the whole inverted index:\n" + plan.toString)
+      val plan = df.queryExecution.executedPlan
+      assert(termScans(df) == Seq(Seq("postings")) &&
+          termScans(rollup) == Seq(Seq("termdf")),
+        "the term IN (...) filter must reach the postings scan of the " +
+          "search and the termdf scan of its rollup (PushedFilters) — " +
+          "without it a query reads the whole inverted index:\n" +
+          plan + "\n" + rollup.queryExecution.executedPlan)
       // ONE corpus-sized exchange (the per-doc score agg over matched
-      // postings); the other three are |query-terms|-, |batches|- and
-      // |deletions-since-compact|-sized rollups feeding the broadcasts
-      // — model-sized at any corpus
-      assert(shuffles(df) <= 4,
-        "search grew a fifth exchange — the only corpus-sized one " +
-          "must be the per-doc score agg:\n" + plan.toString)
-      val bcasts = plan.collect {
-        case b: org.apache.spark.sql.execution.joins
-              .BroadcastHashJoinExec => b
-      }
-      assert(bcasts.nonEmpty,
-        "df must join the postings by broadcast:\n" + plan.toString)
+      // postings); the rollups were collected before the plan was built
+      assert(shuffles(df) <= 1,
+        "search grew a second exchange — the only one must be the " +
+          "per-doc score agg:\n" + plan.toString)
+      assert(plan.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }.isEmpty, "an empty ledger must add no join:\n" + plan.toString)
     }
   }
 
   test("TextIndex.search between folds: after an un-folded applyCdc " +
-    "with updates and deletes the plan is the post-fold plan plus one " +
-    "ledger join — ≤ 4 exchanges, no tokenize Generate, the term IN " +
-    "pushed into every postings and termdf scan") {
+    "with updates and deletes the plan reads ONE postings scan over " +
+    "both batches with the term IN pushed, no termdf/stats/deleted/" +
+    "pending scan, no join, no tokenize Generate, ≤ 1 exchange; the " +
+    "rollup job pushes the term IN into its termdf scan") {
     withStaticPlans {
       import org.apache.spark.sql.functions.{col, concat, lit}
       val tmp = java.nio.file.Files
@@ -535,30 +538,46 @@ class PlanShapeSpec extends SparkSpec {
         upd.select(col("doc_id"),
           concat(col("text"), lit(" updated window")).as("text")),
         "doc_id", "text")
-      val df = graft.ops.TextIndex.search(spark, tmp,
-        "merge window sort", 10)
+      val query = "merge window sort"
+      val df = graft.ops.TextIndex.search(spark, tmp, query, 10)
       val plan = df.queryExecution.executedPlan
-      val scans = plan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      def scansOf(p: org.apache.spark.sql.execution.SparkPlan,
+          part: String) = p.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.relation.location.rootPaths
+              .exists(_.toString.contains(s"/$part/")) => f
       }
-      def partScans(part: String) = scans.filter(_.relation.location
-        .rootPaths.exists(_.toString.contains(s"/$part/")))
+      def pushesIn(f: org.apache.spark.sql.execution.FileSourceScanExec) =
+        f.metadata.get("PushedFilters").exists(_.contains("In(term"))
       assert(plan.collect {
         case g: org.apache.spark.sql.execution.GenerateExec => g
       }.isEmpty, "search must not tokenize at query time:\n" + plan)
-      assert(shuffles(df) <= 4,
-        "an un-folded CDC store grew the search plan past the " +
-          "post-fold exchanges plus the ledger's:\n" + plan.toString)
-      assert(partScans("pending").isEmpty,
-        "search must not read the pending part:\n" + plan.toString)
-      // the CDC append added a second batch to both parts
-      for (part <- Seq("postings", "termdf")) {
-        val ss = partScans(part)
-        assert(ss.length == 2 && ss.forall(_.metadata.get("PushedFilters")
-            .exists(_.contains("In(term"))),
-          s"the term IN (...) filter must reach both $part batch scans " +
-            "(PushedFilters):\n" + plan.toString)
-      }
+      assert(shuffles(df) <= 1,
+        "the search plan grew past its one score-agg exchange:\n" + plan)
+      for (part <- Seq("termdf", "stats", "deleted", "pending"))
+        assert(scansOf(plan, part).isEmpty,
+          s"the returned plan must not scan $part (the rollup job " +
+            s"reads it):\n$plan")
+      assert(plan.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }.isEmpty, "the collected ledger must be an inlined filter, not " +
+        "a join:\n" + plan)
+      // the CDC append added a second postings batch: both batches of
+      // equal schema load as ONE relation
+      val postings = scansOf(plan, "postings")
+      assert(postings.length == 1 && postings.head.relation.location
+          .rootPaths.map(_.getName).sorted == Seq("b0", "b1") &&
+          pushesIn(postings.head),
+        "expected one postings scan over b0 and b1 with the term " +
+          "IN (...) pushed:\n" + plan)
+      val (parts, _) = graft.ops.AnnIndex.load(spark, tmp)
+      val rollup = graft.ops.TextIndex.rollupRows(parts,
+        query.split(" ").toSeq, "doc_id")
+      val termdf = scansOf(rollup.queryExecution.executedPlan, "termdf")
+      assert(termdf.length == 1 && termdf.forall(pushesIn) &&
+          shuffles(rollup) == 0,
+        "the rollup job must read termdf once with the term IN pushed, " +
+          "and shuffle nothing:\n" + rollup.queryExecution.executedPlan)
     }
   }
 

@@ -153,6 +153,39 @@ class TextDedupSpec extends SparkSpec {
     assert(kept.toSeq == Seq(3L, 7L))
   }
 
+  test("exact dedup: null text is one fingerprint — its lowest id " +
+    "survives, every column passes through") {
+    val df = Seq[(Long, String, Int)]((5L, null, 1), (2L, null, 2),
+      (9L, "Same text", 3), (4L, "same  TEXT", 4)).toDF("doc_id", "text", "x")
+    val kept = Dedup.exact(df, "doc_id", "text")
+    assert(kept.columns.toSeq == Seq("doc_id", "text", "x"))
+    assertSameRows(kept, Seq(Seq(2L, null, 2), Seq(4L, "same  TEXT", 4)))
+  }
+
+  test("exact dedup reads a parquet upstream with ONE scan") {
+    val path = java.nio.file.Files.createTempDirectory("graft-exact")
+      .toString + "/docs"
+    Seq((1L, "a b"), (2L, "A  b"), (3L, "c")).toDF("doc_id", "text")
+      .write.parquet(path)
+    val kept = Dedup.exact(spark.read.parquet(path), "doc_id", "text")
+    val scans = kept.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(scans.length == 1,
+      s"the upstream was scanned ${scans.length}×:\n" +
+        kept.queryExecution.sparkPlan)
+    assertSameRows(kept, Seq(Seq(1L, "a b"), Seq(3L, "c")))
+  }
+
+  test("exact dedup keeps exactly the minimum-id rows of each " +
+    "fingerprint when an id repeats across two fingerprints") {
+    // id 1 is the minimum of "a" but not of "b" (whose minimum is 0):
+    // its "b" row is not a survivor of "b"
+    val df = Seq((1L, "a"), (0L, "b"), (1L, "b")).toDF("doc_id", "text")
+    assertSameRows(Dedup.exact(df, "doc_id", "text"),
+      Seq(Seq(0L, "b"), Seq(1L, "a")))
+  }
+
   test("jaccard on array columns") {
     val df = Seq((Seq("a", "b", "c"), Seq("b", "c", "d")),
       (Seq("a"), Seq("a")), (Seq[String](), Seq[String]()))

@@ -26,6 +26,30 @@ class TextIndexSpec extends SparkSpec {
   private def asRows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSeq
 
+  test("a collected deletion ledger keeps exactly AnnIndex.liveRows' " +
+    "rows, as an inlined join-free filter and past the inline bound " +
+    "as a broadcast local relation; null ids stay live") {
+    val rows = Seq[(java.lang.Long, Int, String)]((1L, 0, "a"),
+      (1L, 2, "a2"), (2L, 0, "b"), (2L, 1, "b1"), (3L, 0, "c"),
+      (null, 0, "n"), (4L, 3, "d")).toDF("doc_id", "mb", "x")
+    val ledger = Seq[(java.lang.Long, Int)]((1L, 1), (2L, 1), (2L, 2),
+      (4L, 3), (null, 5)).toDF("doc_id", "th")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      asRows(df.select("doc_id", "mb", "x")).sortBy(_.mkString("|"))
+    val want = sorted(AnnIndex.liveRows(rows, ledger, "doc_id"))
+    assert(want.map(_(2).toString) == Seq("a2", "c", "d", "n"))
+    val collected = ledger.collect().map(r => r.get(0) -> r.getInt(1)).toSeq
+    val field = ledger.schema("doc_id")
+    val inlined = TextIndex.liveUnder(rows, field, collected)
+    assert(inlined.queryExecution.sparkPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+    }.isEmpty, inlined.queryExecution.sparkPlan.toString)
+    assert(sorted(inlined) == want)
+    assert(sorted(TextIndex.liveUnder(rows, field, collected,
+      inlineMax = 0)) == want)
+    assert(TextIndex.liveUnder(rows, field, Seq.empty) eq rows)
+  }
+
   test("save → search answers exactly like the in-memory bm25Search, " +
     "for single- and multi-term queries") {
     val docs = corpus.toDF("doc_id", "text")

@@ -2,8 +2,9 @@
 # Run a graft main class against the ALREADY-COMPILED classes (no sbt,
 # no recompile) — lets long audit/bench chains run in the background
 # while sources are being edited. Mirrors build.sbt's forked-run JVM
-# options (JDK17 add-opens, heap, code cache, stack); session settings
-# belong to graft.Harness.
+# options (JDK17 add-opens, heap, code cache, stack) plus UTF-8 stdout,
+# so the tools' banners do not print as '?' under a POSIX locale;
+# session settings belong to graft.Harness.
 # Usage: tools/runmain.sh <mainClass> [args...]
 set -euo pipefail
 MAIN="$1"; shift
@@ -21,4 +22,5 @@ exec java $ADD_OPENS \
   "-Xmx${SPARK_DRIVER_MEM:-24g}" \
   -XX:ReservedCodeCacheSize=1g \
   -Xss4m \
+  -Dfile.encoding=UTF-8 -Dstdout.encoding=UTF-8 \
   -cp "$CP" "$MAIN" "$@"
