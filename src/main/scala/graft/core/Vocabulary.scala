@@ -168,12 +168,6 @@ object Vocabulary {
         (e, n, i + 1, f) }
   }
 
-  def filterRareLocal(spark: SparkSession,
-      vocab: Seq[(String, Long, Int, Double)],
-      minValid: CountOrProportion, totalObservations: Long): DataFrame =
-    vocabDfFromTuples(spark,
-      foldRareTuples(vocab, minValid, totalObservations))
-
   /** Vocabulary over ARRAY-valued observations (the reference's nested
     * ExpandableDfDict cells, vocabulary.py:114-123: lists inside cells are
     * flattened while counting, NaN/null skipped): explode then count —
@@ -240,9 +234,4 @@ object Vocabulary {
       .withColumn(outCol, coalesce(col("__vocab_idx"), lit(0)))
       .drop("__vocab_element", "__vocab_idx")
   }
-
-  /** Driver-side map for hot batch-builder paths (always small). */
-  def toMap(vocab: DataFrame): Map[String, Int] =
-    vocab.select("element", "idx").collect()
-      .map(r => r.getString(0) -> r.getInt(1)).toMap
 }

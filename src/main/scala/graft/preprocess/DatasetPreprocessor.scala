@@ -1,9 +1,9 @@
 package graft.preprocess
 
-import graft.core.{DataModality, DatasetConfig, MeasurementConfig, TemporalityType, Vocabulary}
+import graft.core.{DataModality, DatasetConfig, TemporalityType, Vocabulary}
 import graft.functors.TimeDependentFunctor
 import graft.ingest.{EventDataset, Splits}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dataset-level preprocessing orchestration — the reference's
@@ -14,6 +14,12 @@ import org.apache.spark.sql.functions._
   *   STATIC measurements            → train rows of the subjects table
   *   FUNCTIONAL_TIME_DEPENDENT      → functor columns computed on train
   *                                    events (⋈ broadcast subjects)
+  *
+  * The reference loops over measurements; here every source is stacked
+  * into one `(measurement, key, v)` frame fitted once, keyed by
+  * (measurement, key) like MLlib's multi-column StringIndexer: one counts
+  * table feeds the column-drop rule, every vocabulary and the numeric
+  * fits, and the job count does not grow with the measurements.
   *
   * All fits see ONLY the train split (leakage rule, :1043/:1125/:1304);
   * transform applies the fitted params to every split. The fitted state is
@@ -48,92 +54,86 @@ object DatasetPreprocessor {
       maxNumericalValueFrequency = cfg.maxNumericalValueFrequency,
       normalizer = cfg.normalizer,
       outlierDetector = cfg.outlierDetector)
-    val trainMeasAll = Splits.forSplit(ds.measurements, splits, "train")
-    val trainSubj = Splits.forSplit(ds.subjects, splits, "train")
     val trainEvents = Splits.forSplit(
       TimeDependentFunctor.addColumns(ds.events, ds.subjects, functors),
       splits, "train")
 
-    // Column-drop rule: a DYNAMIC measurement observed fewer than
-    // minValidColumnObservations times on train (count or proportion of
-    // train events) is dropped before any fitting.
-    val dropped: Set[String] = cfg.minValidColumnObservations match {
-      case Some(m) =>
-        // count train events WITHOUT the functor/subjects join — only the
-        // row count matters here
-        val totalTrainEvents =
-          Splits.forSplit(ds.events, splits, "train").count()
-        val observed = trainMeasAll.groupBy("measurement")
-          .agg(count(lit(1)).as("n")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val minN = m.resolve(totalTrainEvents)
-        cfg.measurements.collect {
-          case mc if mc.temporality == TemporalityType.Dynamic &&
-            observed.getOrElse(mc.name, 0L) < minN => mc.name
-        }.toSet
-      case None => Set.empty
-    }
     // Missing-column drop (event_stream_dataset.py:1310-1312): a STATIC
     // measurement whose column is absent from subjects, or an FTD
     // measurement whose functor column is absent from the events frame,
     // is dropped rather than failing analysis. (Dynamic measurements
     // live in the long layout, where "column absent" is just zero rows —
-    // the observation-count rule above covers them.)
+    // the observation-count rule below covers them.)
     val schemaDropped: Set[String] = cfg.measurements.collect {
       case m if m.temporality == TemporalityType.Static &&
         !ds.subjects.columns.contains(m.name) => m.name
       case m if m.temporality == TemporalityType.FunctionalTimeDependent &&
         !trainEvents.columns.contains(m.name) => m.name
     }.toSet
-    val keptMeasurements = cfg.measurements
-      .filterNot(m => dropped.contains(m.name) ||
-        schemaDropped.contains(m.name))
+    def names(t: TemporalityType, p: DataModality => Boolean = _ => true) =
+      cfg.measurements.filter(m => m.temporality == t && p(m.modality) &&
+        !schemaDropped(m.name)).map(_.name)
+    val dynamic = names(TemporalityType.Dynamic)
+    val numeric = names(TemporalityType.Dynamic,
+      _ == DataModality.MultivariateRegression)
+    val categorical = names(TemporalityType.Dynamic,
+      Set(DataModality.SingleLabelClassification,
+        DataModality.MultiLabelClassification))
+    val static = names(TemporalityType.Static)
+    val timeDependent = names(TemporalityType.FunctionalTimeDependent)
 
-    // Per-measurement fits are independent — run them CONCURRENTLY.
-    // Each fit is a short chain of eager jobs (checkpointed aggregates);
-    // serial execution leaves the cluster idle between a measurement's
-    // jobs. Spark job submission is thread-safe; a dataset with dozens of
-    // measurements fits in the wall-clock of its widest one.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
+    // THE stack: train rows of every source as (measurement, key, v).
+    // Static columns become (name, value, null) rows, FTD functor columns
+    // (name, name, value) rows; a proportion column-drop threshold adds a
+    // (null, null, null) row per train event, its denominator.
+    val eventsTotal = cfg.minValidColumnObservations.exists(_.value.isRight)
+    def row(m: Column, k: Column, v: Column) = struct(
+      m.cast("string").as("measurement"), k.cast("string").as("key"),
+      v.cast("double").as("v"))
+    def stacked(df: DataFrame, rows: Seq[Column]) =
+      df.select(explode(array(rows: _*)).as("r")).select("r.*")
+    val none = lit(null)
+    val legs = Seq(
+      Some(Splits.forSplit(ds.measurements, splits, "train")
+        .filter(col("measurement").isin(dynamic: _*))
+        .select(col("measurement"), col("key").cast("string").as("key"),
+          col("value").cast("double").as("v"))),
+      Option.when(static.nonEmpty)(
+        stacked(Splits.forSplit(ds.subjects, splits, "train"),
+          static.map(n => row(lit(n), col(n), none)))),
+      Option.when(timeDependent.nonEmpty || eventsTotal)(
+        stacked(trainEvents,
+          timeDependent.map(n => row(lit(n), lit(n), col(n))) ++
+            Option.when(eventsTotal)(row(none, none, none))))
+    ).flatten
+    val (fits, types) = Preprocessor.fitKeyed(
+      legs.reduce(_.unionByName(_)), (numeric ++ timeDependent).toSet, pcfg)
 
-    val dynamicF = keptMeasurements.collect {
-      case m if m.temporality == TemporalityType.Dynamic &&
-          m.modality == DataModality.MultivariateRegression =>
-        val obs = trainMeasAll.filter(col("measurement") === m.name)
-        m.name -> Future(Preprocessor.fit(obs, "key", "value", pcfg))
+    // Column-drop rule: a DYNAMIC measurement observed fewer than
+    // minValidColumnObservations times on train (count or proportion of
+    // train events; null-key rows count) is dropped, its fit (keyed apart
+    // from every other) discarded. The null measurement's rows are the
+    // train events.
+    val observed: Map[Option[String], Long] =
+      types.groupMapReduce(t => Option(t.measurement))(_.nObs)(_ + _)
+    val dropped: Set[String] = cfg.minValidColumnObservations match {
+      case Some(m) =>
+        val minN = m.resolve(observed.getOrElse(None, 0L))
+        dynamic.filter(n => observed.getOrElse(Some(n), 0L) < minN).toSet
+      case None => Set.empty
     }
-
-    val dynamicCategoricalF = keptMeasurements.collect {
-      case m if m.temporality == TemporalityType.Dynamic &&
-          (m.modality == DataModality.SingleLabelClassification ||
-            m.modality == DataModality.MultiLabelClassification) =>
-        val obs = trainMeasAll.filter(col("measurement") === m.name)
-        // fitLocal: the vocab is broadcast-joined at transform time, so it
-        // must be memory-small anyway — the LocalTableScan form costs zero
-        // cluster jobs per consumer (no checkpoint, no rank jobs)
-        m.name -> Future(Vocabulary.fitLocal(obs, "key"))
-    }
-
-    val staticF = keptMeasurements.collect {
-      case m if m.temporality == TemporalityType.Static =>
-        m.name -> Future(Vocabulary.fitLocal(trainSubj, m.name))
-    }
-
-    val timeDependentF = keptMeasurements.collect {
-      case m if m.temporality == TemporalityType.FunctionalTimeDependent =>
-        // univariate: the functor column under a constant key
-        val obs = trainEvents.select(lit(m.name).as("key"),
-          col(m.name).cast("double").as("value"))
-        m.name -> Future(Preprocessor.fit(obs, "key", "value", pcfg))
-    }
-
-    def await[A](fs: Seq[(String, Future[A])]): Map[String, A] =
-      fs.map { case (n, f) => n -> Await.result(f, Duration.Inf) }.toMap
-
-    FittedDataset(await(dynamicF), await(dynamicCategoricalF),
-      await(staticF), await(timeDependentF), dropped ++ schemaDropped)
+    // vocabularies of categorical and static measurements: the counts of
+    // their non-null keys
+    def vocab(m: String) = Vocabulary.fromCountsLocal(
+      ds.measurements.sparkSession,
+      types.filter(t => t.measurement == m && t.key != null)
+        .map(t => t.key -> t.nObs))
+    FittedDataset(
+      numeric.filterNot(dropped).map(m => m -> fits(m)).toMap,
+      categorical.filterNot(dropped).map(m => m -> vocab(m)).toMap,
+      static.map(m => m -> vocab(m)).toMap,
+      timeDependent.map(m => m -> fits(m)).toMap,
+      dropped ++ schemaDropped)
   }
 
   /** Transform every split with train-fit params.
@@ -143,38 +143,13 @@ object DatasetPreprocessor {
   def transform(ds: EventDataset, fit: FittedDataset,
       functors: Seq[TimeDependentFunctor] = Nil)
       : (DataFrame, DataFrame, DataFrame) = {
-    // dynamic numeric: transform each measurement's slice, union back.
-    // Dropped measurements' rows are removed entirely (the reference drops
-    // the column).
-    val untouched = ds.measurements.filter(
-      !col("measurement").isin(
-        (fit.dynamic.keySet ++ fit.dynamicCategorical.keySet ++
-          fit.dropped).toSeq: _*))
-    val numericParts = fit.dynamic.map { case (name, f) =>
-      Preprocessor.transform(
-        ds.measurements.filter(col("measurement") === name),
-        "key", "value", f)
-    }
-    val catParts = fit.dynamicCategorical.map { case (name, vocab) =>
-      Vocabulary.lookup(
-        ds.measurements.filter(col("measurement") === name),
-        "key", vocab, "key_idx")
-        .withColumn("final_key", col("key"))
-        .withColumn("value_clean", lit(null).cast("double"))
-        .withColumn("is_inlier", lit(true))
-        .withColumn("value_norm", lit(null).cast("double"))
-    }
-    // The augmented untouched frame is ALWAYS the base (so dropped
-    // measurements are excluded and the output schema is stable even when
-    // no measurement was fitted); fitted parts union into it.
-    val untouchedAugmented = untouched
-      .withColumn("final_key", col("key"))
-      .withColumn("value_clean", col("value"))
-      .withColumn("is_inlier", lit(true))
-      .withColumn("value_norm", col("value"))
-      .withColumn("key_idx", lit(0))
-    val transformedMeas = (numericParts ++ catParts)
-      .foldLeft(untouchedAugmented)(_.unionByName(_))
+    // measurements: ONE pass over every fitted measurement (see
+    // Preprocessor.transformKeyed); rows of dropped measurements are
+    // removed (the reference drops the column), as are rows without one.
+    val m = col("measurement")
+    val transformedMeas = Preprocessor.transformKeyed(
+      ds.measurements.filter(m.isNotNull && !m.isin(fit.dropped.toSeq: _*)),
+      m, col("key"), col("value"), fit.dynamic, fit.dynamicCategorical)
 
     // events: functor columns + FTD normalization
     val withFunctors =

@@ -84,6 +84,16 @@ object NumericKernel {
         minUniqueNumericalObservations)),
       Some(maxNumericalValueFrequency))
 
+  /** Per-(measurement, key, value) observation counts over stacked
+    * observations `(measurement, key, v)` — the one base aggregation of a
+    * keyed fit (checkpointed by Preprocessor): type inference, the
+    * column-drop rule, every vocabulary and every fit statistic derive
+    * from it. Null-key rows stay: they count toward their measurement's
+    * observations, and inference keeps them out of the column total. */
+  private[preprocess] def perValueCounts(obs: DataFrame): DataFrame =
+    obs.groupBy(col("measurement"), col("key"), col("v").cast("double").as("v"))
+      .agg(count(lit(1)).as("cnt"))
+
   /** Reference-faithful variant: every rule can be DISABLED (`None`, the
     * reference's `if self.config.X is not None` guards / `lt_count_or_
     * proportion(None) == False`) and count thresholds can be PROPORTIONS
@@ -92,33 +102,28 @@ object NumericKernel {
     *    observation count (`total_col_obs`, :1229-1235) — computed
     *    in-plan as the sum of per-key counts, no extra action;
     *  - min-unique proportion resolves against the KEY's non-null value
-    *    count (`len(vals)`, :1259-1262) — per key, in-expression. */
-  /** Per-(key, value) observation counts — the shared base aggregation for
-    * type inference AND (checkpointed once by Preprocessor.fit) every
-    * downstream fit statistic. Null KEYS are outside the measurement space
-    * entirely (the reference iterates the column's non-null keys, and its
-    * total_col_obs denominator excludes them) — null VALUES stay (they feed
-    * n_obs). */
-  def perValueCounts(kv: DataFrame, keyCol: String, valCol: String)
-      : DataFrame =
-    kv.filter(col(keyCol).isNotNull)
-      .groupBy(col(keyCol).as("key"), col(valCol).cast("double").as("v"))
-      .agg(count(lit(1)).as("cnt"))
-
+    *    count (`len(vals)`, :1259-1262) — per key, in-expression.
+    * Null KEYS are outside the measurement space entirely (the reference
+    * iterates the column's non-null keys). */
   def inferValueTypesCfg(
       kv: DataFrame, keyCol: String, valCol: String,
       minValidVocabElementObservations: Option[graft.core.CountOrProportion],
       minTrueFloatFrequency: Option[Double],
       minUniqueNumericalObservations: Option[graft.core.CountOrProportion],
       maxNumericalValueFrequency: Option[Double]): DataFrame =
-    inferValueTypesFromCounts(perValueCounts(kv, keyCol, valCol),
+    inferValueTypesFromCounts(
+      perValueCounts(kv.filter(col(keyCol).isNotNull).select(
+        lit("").as("measurement"), col(keyCol).as("key"),
+        col(valCol).as("v"))),
       minValidVocabElementObservations, minTrueFloatFrequency,
       minUniqueNumericalObservations, maxNumericalValueFrequency)
 
-  /** Type inference over a prebuilt `perValueCounts` frame (key, v, cnt).
-    * Splitting here lets Preprocessor.fit run ONE scan of the train
-    * observations and derive every fit statistic from the (far narrower)
-    * counts table. */
+  /** Type inference over a prebuilt `perValueCounts` frame (measurement,
+    * key, v, cnt), one row per (measurement, key), thresholds resolved
+    * per measurement. Splitting here lets Preprocessor run ONE scan of
+    * the train observations and derive every fit statistic from the (far
+    * narrower) counts table. A null key gets a row too (its `n_obs` is
+    * the column-drop rule's), but is outside every column total. */
   def inferValueTypesFromCounts(
       perValue: DataFrame,
       minValidVocabElementObservations: Option[graft.core.CountOrProportion],
@@ -128,7 +133,7 @@ object NumericKernel {
     // collapse to the banker's-rounded value space while carrying raw-space
     // stats; the null-value group (rv IS NULL ⟺ v IS NULL) only feeds n_obs.
     val perRounded = perValue
-      .groupBy(col("key"), bround(col("v")).as("rv"))
+      .groupBy(col("measurement"), col("key"), bround(col("v")).as("rv"))
       .agg(
         sum("cnt").as("cnt_r"),
         count(when(col("v").isNotNull, lit(1))).as("n_raw"),
@@ -137,7 +142,7 @@ object NumericKernel {
         max(when(col("v").isNotNull, col("cnt"))).as("max_cnt_raw"),
         sum(when(col("v").isNotNull, col("v") * col("cnt"))).as("sv"))
     val nonNull = col("rv").isNotNull
-    val stats = perRounded.groupBy("key").agg(
+    val stats = perRounded.groupBy("measurement", "key").agg(
       sum("cnt_r").as("n_obs"),
       sum(when(nonNull, col("cnt_r")).otherwise(lit(0L))).as("n"),
       sum("n_raw").as("n_unique_raw"),
@@ -178,17 +183,16 @@ object NumericKernel {
         col("n_obs") < (lit(p) * col("__total_col_obs")).cast("long")
       case None => lit(false)
     }
-    // total_col_obs joined in-plan only when a proportion needs it; the
-    // stats frame is checkpointed first so the total is a re-read of tiny
-    // per-key partitions, not a second scan of the observations
+    // total_col_obs, per measurement over its non-null keys, only when a
+    // proportion needs it: a window over the per-key stats rows
     val needsTotal = minValidVocabElementObservations
       .exists(_.value.isRight)
     val statsT =
-      if (needsTotal) {
-        val statsC = stats.localCheckpoint(true)
-        statsC.crossJoin(broadcast(
-          statsC.agg(sum("n_obs").as("__total_col_obs"))))
-      } else stats
+      if (needsTotal) stats.withColumn("__total_col_obs",
+        sum(when(col("key").isNotNull, col("n_obs")))
+          .over(org.apache.spark.sql.expressions.Window
+            .partitionBy("measurement")))
+      else stats
     statsT
       .withColumn("n_unique", nUnique)
       .withColumn("mode_frequency", modeFreq)
@@ -199,8 +203,8 @@ object NumericKernel {
           .when(isCat, "categorical_float")
           .when(isIntish, "integer")
           .otherwise("float"))
-      .select("key", "n", "n_unique", "int_fraction", "mode_frequency",
-        "value_type", "k_shift")
+      .select("measurement", "key", "n", "n_unique", "int_fraction",
+        "mode_frequency", "value_type", "k_shift", "n_obs")
   }
 
   /** Numeric→categorical re-encode (event_stream_dataset.py:288-368):

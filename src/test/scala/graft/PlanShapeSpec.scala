@@ -699,4 +699,45 @@ class PlanShapeSpec extends SparkSpec {
           " shuffled join of the corpus.\n" + plan.toString)
     }
   }
+
+  test("DatasetPreprocessor.transform reads the measurements once: one " +
+    "scan and no Union, however many measurements were fitted") {
+    withStaticPlans {
+      import graft.core.{DataModality => DM, DatasetConfig,
+        MeasurementConfig, TemporalityType => TT}
+      import spark.implicits._
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-dataset-transform-plan").toString
+      (0 until 80).map(i => (i.toLong, i.toLong, "A", i % 4 + 1L,
+          Seq("lab", "vit", "dx", "other")(i % 4), s"k${i % 5}", i * 0.5))
+        .toDF("metadata_id", "event_id", "event_type", "subject_id",
+          "measurement", "key", "value")
+        .write.parquet(s"$dir/measurements")
+      val events = (0 until 80).map(i => (i.toLong, i % 4 + 1L,
+          new java.sql.Timestamp(1704067200000L + i * 3600000L), "A"))
+        .toDF("event_id", "subject_id", "timestamp", "event_type")
+      val subjects = (1L to 4L).map(Tuple1(_)).toDF("subject_id")
+      val ds = graft.ingest.EventDataset(events,
+        spark.read.parquet(s"$dir/measurements"), subjects)
+      val splits = (1L to 4L).map(s => (s, "train"))
+        .toDF("subject_id", "split")
+      def num(n: String) = MeasurementConfig(n, TT.Dynamic,
+        DM.MultivariateRegression, valuesColumn = Some("value"))
+      val cfg = DatasetConfig(measurements = Seq(num("lab"), num("vit"),
+        MeasurementConfig("dx", TT.Dynamic, DM.MultiLabelClassification)))
+      val fit = graft.preprocess.DatasetPreprocessor.fit(ds, splits, cfg)
+      val (tm, _, _) = graft.preprocess.DatasetPreprocessor.transform(ds, fit)
+      val plan = tm.queryExecution.executedPlan
+      val scans = plan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+      val unions = plan.collect {
+        case u: org.apache.spark.sql.execution.UnionExec => u
+      }
+      assert(scans.length == 1 && unions.isEmpty,
+        "the transformed measurements must be one pass over one scan " +
+          "(broadcast-joined fit state), not a filter per fitted " +
+          "measurement unioned back:\n" + plan.toString)
+    }
+  }
 }
